@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): one JSON line with per-query wall
   * times at SPARK_GRAFT_SF_DIR.
   *
@@ -11,41 +9,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Engine perf confs shared by every timed entry point (Bench,
-    * MicroBench, Profile, PlanDump) AND by Verify — the oracle gate runs
-    * under exactly the bench configuration, so result-identity of these
-    * settings is certified, not assumed. Both are scale-adaptive /
-    * scale-inert (OPTIMIZATION_r15.md §global):
-    *  - scan fan-out (see Tables.maybeFanOut): repartitions a fact table
-    *    only while its files underfill the cluster; identity at scale.
-    *  - AQE coalesce floor: AQE's byte-targeted coalescing treats
-    *    partition BYTES as the whole cost model, so a CPU-heavy stage
-    *    over a small shuffle (posting-list pair expansion, resample
-    *    grids) collapses to ONE task (measured 1.6–1.7 s single-task
-    *    stages at sf0.1). 64 KiB keeps parallelism available for such
-    *    stages; at cluster scale post-shuffle partitions sit far above
-    *    any sane floor, so the setting is inert there. */
-  def applyBenchConf(spark: SparkSession): Unit = {
-    spark.conf.set("spark.graft.scan.fanout",
-      sys.env.getOrElse("SPARK_GRAFT_FANOUT", "true"))
-    spark.conf.set("spark.graft.scan.fanout.taskBytes",
-      sys.env.getOrElse("SPARK_GRAFT_FANOUT_TASK_BYTES", "65536"))
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    applyBenchConf(spark)
+    val spark = GraftSession.bench()
 
     def run(name: String): Double = {
       val t0 = System.nanoTime()
@@ -98,32 +64,13 @@ object Bench {
     // window left by a heavy predecessor (BENCH_r06: q1_agg 6.65 s
     // in-sweep vs 0.71 s isolated, a 15x phantom). At sweep END the JVM
     // is fully warm and calm, so re-measure late and keep the better
-    // number for (a) any query that regressed >2x vs the previous
-    // same-sf run (BENCH_LAST.json, written by every run) and (b) the
-    // slowest tier, where phantoms by definition live.
-    val prior: Map[String, Double] = try {
-      val p = java.nio.file.Paths.get("BENCH_LAST.json")
-      if (!java.nio.file.Files.exists(p)) Map.empty
-      else {
-        val txt = java.nio.file.Files.readString(p)
-        // numbers from another scale factor are not comparable
-        if (!txt.contains("\"sf\":\"" + sfDir + "\"")) Map.empty
-        else {
-          val body = txt.substring(txt.indexOf("\"queries\":"))
-          "\"([A-Za-z0-9_]+)\":(-?[0-9.Ee+-]+)".r.findAllMatchIn(body)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }
-      }
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
-    val regressed = results.collect {
-      case (n, v) if v > 0 &&
-        prior.get(n).exists(pv => pv > 0 && v > math.max(2 * pv, pv + 0.2)) => n
-    }
-    val slowTier = results.filter(_._2 > 0).sortBy(-_._2).take(8).map(_._1)
-    val candidates = (regressed ++ slowTier).distinct.take(16)
+    // number for the slowest tier of THIS run, where phantoms by
+    // definition live. Nothing is read from an earlier run, so a run's
+    // total does not depend on the run before it.
+    val candidates = results.filter(_._2 > 0).sortBy(-_._2).take(8).map(_._1)
     // Record BOTH the pre-repass (in-sweep) and post-repass (late, calm
     // JVM) value for every re-measured query: the re-pass is deliberately
-    // one-sided (extra reps only for regressed/slowest, min kept), so
+    // one-sided (extra reps only for the slowest, min kept), so
     // without the raw pair, per-run totals are not comparable across runs
     // whose repass sets differ — downstream comparisons can pick one
     // consistent protocol (all-pre or all-post) from the pair.
@@ -144,10 +91,10 @@ object Bench {
     }.mkString("{", ",", "}")
     val total = finalResults.map(_._2).filter(_ >= 0).sum
     val json = s"""{"metric":"total","value":$total,"unit":"sec","cold_total":$coldTotal,"reps":$reps,"repass":${candidates.length},"repassed":$rp,"queries":$qs,"sf":"$sfDir"}"""
-    // Full per-query detail goes to the well-known file (read back by the
-    // next run's regression re-pass) and to stdout for the human log.
+    // Full per-query detail goes to the well-known file and to stdout
+    // for the human log.
     println(json)
-    // a subset run must not clobber the full sweep's regression baseline
+    // a subset run must not clobber the full sweep's detail file
     if (only.isEmpty)
       java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_LAST.json"), json)
     spark.stop()

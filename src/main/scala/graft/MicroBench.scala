@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Developer tool: min-of-N wall time for a subset of SparkEntry.queries —
   * per-query numbers from the full Bench sweep carry session cross-talk
   * (GC, JIT, cache pressure), so A/B perf decisions use this instead.
@@ -60,15 +58,7 @@ object MicroBench {
     val reps =
       if (artifact) 5 else sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val names = if (artifact) Sentinels else args.toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Bench.applyBenchConf(spark)
+    val spark = GraftSession.bench()
 
     def once(name: String): Double = {
       val t0 = System.nanoTime()

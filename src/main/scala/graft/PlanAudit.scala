@@ -28,27 +28,19 @@ object PlanAudit {
   val FingerprintSf = "/root/testdata/sf0.01"
 
   /** Session with the bench-shaped confs pinned, so fingerprints are
-    * reproducible from any entry point (main or spec). The
-    * windowGroupLimitThreshold is pre-set to the registry's max top-k:
-    * one query builder raises it at build time, so pinning it here
-    * removes any dependence on query build ORDER. */
-  def fingerprintSession(): SparkSession = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", "65536")
-      // metadata strings (DataFilters/PushedFilters) truncate at a char
-      // budget, and WHERE the "..." cut lands depends on expression-id
-      // digit counts — which vary with session history. Untruncated
-      // text + id-stripping is deterministic; truncated text is not.
-      .config("spark.sql.maxMetadataStringLength", "100000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
-  }
+    * reproducible from any entry point (main or spec). Cores are pinned
+    * at 32 whatever the host: the shuffle partition count is part of
+    * every plan hash. The windowGroupLimitThreshold is pre-set to the
+    * registry's max top-k: one query builder raises it at build time, so
+    * pinning it here removes any dependence on query build ORDER.
+    * Metadata strings (DataFilters/PushedFilters) truncate at a char
+    * budget, and WHERE the "..." cut lands depends on expression-id
+    * digit counts — which vary with session history. Untruncated text +
+    * id-stripping is deterministic; truncated text is not. */
+  def fingerprintSession(): SparkSession =
+    GraftSession.local(cores = 32, logLevel = "ERROR", extra = Map(
+      "spark.sql.optimizer.windowGroupLimitThreshold" -> "65536",
+      "spark.sql.maxMetadataStringLength" -> "100000"))
 
   /** Normalized physical-plan text: expression ids (`#123`), plan ids,
     * and object addresses stripped — everything else (operator tree,
@@ -142,12 +134,7 @@ object PlanAudit {
       else Seq("m1_project", "q1_agg", "join_broadcast", "topk_orders",
         "x2_dedup", "dedup_lsh_verified", "q3_shipping", "sim_ann_ivfpq",
         "curate_filter", "text_winnow", "dedup_span_removal")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(logLevel = "ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -1,15 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Developer tool: write `explain("formatted")` for named queries to files
   * under a directory, with the BENCH-shaped session confs (the plans the
   * round's perf numbers were measured on — unlike PlanAudit mode 1, which
-  * uses a 4-core shape-review session).
+  * runs without the bench confs).
   *
   * usage: runMain graft.PlanDump <outDir> <suffix> <query...>
   *   writes <outDir>/<query>_<suffix>.txt
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default: the
+  * available processors).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -18,17 +17,9 @@ object PlanDump {
     val suffix = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxMetadataStringLength", "1000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Bench.applyBenchConf(spark)
+    val spark = GraftSession.bench(
+      extra = Map("spark.sql.maxMetadataStringLength" -> "1000"),
+      logLevel = "ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Developer tool (guide §1): per-stage breakdown of one or more queries —
@@ -12,8 +11,8 @@ import scala.collection.mutable
   * (default 2) and the LAST (warm) run is profiled; the cold run absorbs
   * codegen/JIT so stage times reflect steady state.
   *
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
-  * SPARK_GRAFT_REPS (default 2).
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default:
+  * the available processors), SPARK_GRAFT_REPS (default 2).
   */
 object Profile {
 
@@ -22,20 +21,12 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
     val names = args.toSeq
     require(names.nonEmpty, "usage: runMain graft.Profile <query...>")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     if (sys.env.getOrElse("SPARK_GRAFT_BENCHCONF", "true") == "true")
-      Bench.applyBenchConf(spark)
+      GraftSession.applyBenchConf(spark)
 
     val stages = mutable.ArrayBuffer[St]()
     val taskMax = mutable.Map[Int, Long]().withDefaultValue(0L)

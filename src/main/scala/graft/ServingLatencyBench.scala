@@ -4,7 +4,7 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** Serving-mode latency slice (r14 verdict #6): request→response wall
@@ -28,13 +28,7 @@ import org.apache.spark.sql.functions._
 object ServingLatencyBench {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val serving = new graft.streaming.ServingEndpoint(port = 0, syncTimeoutMs = 30000)
     val stream = graft.streaming.UdSource.readStream(spark, serving.sourceName)

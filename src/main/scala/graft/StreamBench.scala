@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -30,24 +29,7 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val passes = sys.env.getOrElse("SPARK_GRAFT_STREAM_PASSES", "10").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      // Streaming tuning differs from batch: shuffle partitions fix the
-      // number of STATE STORE instances per stateful operator, and each
-      // one pays commit/checkpoint cost every micro-batch. For this state
-      // size (≲100k windowed keys) 4 stores beat 32 by ~2x — at real
-      // scale you size this to state volume, not core count.
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // changelog checkpointing: commit the per-batch delta, snapshot in
-      // the background — the production setting that keeps RocksDB commit
-      // cost O(changed keys) instead of O(state).
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(extra = GraftSession.StreamStateConf)
     import spark.implicits._
     implicit val ctx = spark.sqlContext
 
@@ -61,8 +43,8 @@ object StreamBench {
     val spanMs = events.iterator.map(_.ts.getTime).max - minTs + 120000L
 
     // 8 input partitions: a single-partition MemoryStream block would
-    // deserialize each 100k-row batch on one core, starving the 32-thread
-    // executor before the first shuffle.
+    // deserialize each 100k-row batch on one core, starving the other
+    // task slots before the first shuffle.
     val in = MemoryStream[E](spark, numPartitions = 8)
     val q = in.toDF()
       .withWatermark("ts", "30 seconds")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,17 +8,9 @@ object Verify {
     // iteration) restrict the dump; the driver's 2-arg call runs everything.
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // the oracle gate certifies results under the BENCH configuration
-    // (scan fan-out etc.) — see Bench.applyBenchConf
-    Bench.applyBenchConf(spark)
+    // (scan fan-out etc.) — see GraftSession.applyBenchConf
+    val spark = GraftSession.bench()
     new java.io.File(outDir).mkdirs()
     // Queries are independent read-only plans writing to disjoint dirs:
     // submit a few concurrently so planning/JSON/small-stage gaps of one

@@ -75,7 +75,7 @@ object Pipeline {
     * means no EXTRA payload compression there too — Spark's own defaults
     * already compress shuffle). */
   sealed abstract class Compression(val codec: Option[String]) {
-    /** The conf map for SparkSession.builder (full coverage). */
+    /** The conf map for a session builder (full coverage). */
     def conf: Map[String, String] = codec.fold(Map.empty[String, String])(c => Map(
       "spark.io.compression.codec" -> c,
       "spark.sql.streaming.stateStore.compression.codec" -> c))

@@ -47,10 +47,4 @@ object Routing {
   /** Fan-in (join vertex, R3): plain UNION ALL; streaming watermark becomes
     * the min across inputs, matching wm_fetcher.rs min-over-upstreams. */
   def fanIn(dfs: Seq[DataFrame]): DataFrame = dfs.reduce(_ unionByName _)
-
-  /** Hash shuffle by message keys (R2): writer.rs:286-338 picks
-    * `hash(keys) % partitions`; Spark's HashPartitioning is the same
-    * contract, so downstream keyed state is co-located for free. */
-  def shuffleByKeys(df: DataFrame, partitions: Int, keyCols: Seq[String]): DataFrame =
-    df.repartition(partitions, keyCols.map(col): _*)
 }

@@ -90,7 +90,12 @@ object Scale {
     * WHICH keys false-positive, never a false negative. NOT for blooms
     * that persist as sidecars (admitCrawl/writeSpanTable):
     * `mergeInPlace` requires identical creation parameters across
-    * increments, so those keep the static contract size. */
+    * increments, so those keep the static contract size.
+    *
+    * `n` is the ROW count of `keys`, an upper bound on the distinct keys:
+    * a non-distinct projection (bloomIncrementalSpans passes its
+    * (old_id, shingle) rows) over-sizes the bitmap, which only lowers
+    * the fpp, never changes a result. */
   private[graft] def sizedBloom(keys: DataFrame, hCol: String, cap: Long,
                                 fpp: Double): org.apache.spark.util.sketch.BloomFilter = {
     val k = keys.persist()
@@ -217,13 +222,6 @@ object Scale {
       explode(sequence(lit(0), lit(saltFactor - 1))))
     salted.join(replicated, Seq(key, salt), joinType).drop(salt)
   }
-
-  /** Decide broadcast vs shuffle explicitly: Spark auto-broadcasts below
-    * `spark.sql.autoBroadcastJoinThreshold`; this forces the choice when
-    * the caller knows a side is a dimension regardless of stats. */
-  def dimJoin(fact: DataFrame, dim: DataFrame, keys: Seq[String],
-              joinType: String = "inner"): DataFrame =
-    fact.join(broadcast(dim), keys, joinType)
 
   /** Skew diagnostics: the `topN` hottest keys with their absolute count,
     * corpus share, and cumulative share — the report that decides whether

@@ -403,13 +403,16 @@ object Similarity {
     * running conditional count over the shared sort. One window pass
     * computes every width's rank (same window spec ⇒ one Window
     * operator); narrower sweeps reuse the same sorted frame instead of
-    * re-joining and re-scoring the postings per width. */
+    * re-joining and re-scoring the postings per width. A width repeated
+    * in `nProbes` yields one leg. */
   def ivfTopKSweepFromAssigned(assigned: DataFrame, queries: DataFrame,
                                idCol: String, vecCol: String, k: Int,
                                nLists: Int, nProbes: Seq[Int],
                                dim: Int = 64): DataFrame = {
+    require(nProbes.nonEmpty, "ivfTopKSweepFromAssigned: nProbes is empty")
+    val widths = nProbes.distinct
     val cents = ivfCentroids(nLists, dim)
-    val maxP = nProbes.max
+    val maxP = widths.max
     val nListsL = cents.length
     val probeStructs = transform(sequence(lit(0), lit(nListsL - 1)), ki =>
       struct(element_at(col("gd"), ki + 1).as("d"), ki.as("cell")))
@@ -430,11 +433,11 @@ object Similarity {
       .withColumn("sim", cosine(col("qv"), col("cv")))
       .select(Seq(col("query_id"), col("neighbor_id"), col("sim"),
         col("prank")) ++
-        nProbes.map(np => sum(when(col("prank") <= np, 1L).otherwise(0L))
+        widths.map(np => sum(when(col("prank") <= np, 1L).otherwise(0L))
           .over(w).as(s"cum_$np")): _*)
     ranked
       .select(col("query_id"), col("neighbor_id"), col("sim"),
-        explode(array(nProbes.map(np => struct(
+        explode(array(widths.map(np => struct(
           lit(np.toLong).as("nprobe"),
           col(s"cum_$np").as("rank"),
           (col("prank") <= np && col(s"cum_$np") <= k).as("keep"))): _*))

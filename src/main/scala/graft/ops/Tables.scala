@@ -69,9 +69,9 @@ object Tables {
   /** Fan-out is inert above this table size: past it the scan fills the
     * cluster by itself (≥ 32 scan tasks at the default 4 MiB
     * openCostInBytes charge). A parallelism-INDEPENDENT constant, so the
-    * oracle gate (Verify, local[4] by default) takes the same per-table
-    * fan-out decision as the timed 32-core bench — r15 ADVICE: the old
-    * `slots × 4 MiB` gate silently disagreed between the two. */
+    * oracle gate (Verify) takes the same per-table fan-out decision as the
+    * timed bench at any core count — r15 ADVICE: the old `slots × 4 MiB`
+    * gate silently disagreed between the two. */
   private val FanOutMaxBytes = 128L * 1024 * 1024
 
   /** Bytes per fan-out task (compressed parquet). Derives the fan-out

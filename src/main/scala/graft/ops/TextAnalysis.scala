@@ -17,11 +17,6 @@ object TextAnalysis {
   /** Whitespace tokenizer (the corpus is space-delimited). */
   def tokens(text: Column): Column = split(text, " ")
 
-  /** BPE-ish subword-boundary token count: splits on whitespace AND
-    * letter/digit boundaries, the usual cheap proxy for tokenizer load. */
-  def tokensBpeIsh(text: Column): Column =
-    split(text, "\\s+|(?<=[a-z])(?=[0-9])|(?<=[0-9])(?=[a-z])")
-
   def tokenCount(text: Column): Column = size(tokens(text)).cast("long")
 
   /** Subword token count over a BPE-ish alternation (letter runs, digit

@@ -23,12 +23,6 @@ object Transform {
     * place to shed data — Catalyst pushes this into the parquet scan. */
   def filterAtSource(df: DataFrame, pred: Column): DataFrame = df.where(pred)
 
-  /** (c) flat-map: 1→N expansion with fresh keys/tags; at scale prefer
-    * generator expressions (explode/posexplode) over typed flatMap so the
-    * expansion stays inside whole-stage codegen. */
-  def flatMapAtSource(df: DataFrame, cols: Seq[Column]): DataFrame =
-    df.select(cols: _*)
-
   /** T2 late-data marking: the reference sets `is_late=true` at the source
     * when a message's event time is below the CURRENT source watermark =
     * max observed event time − maxDelay (numaflow `source.rs:726-729`); the

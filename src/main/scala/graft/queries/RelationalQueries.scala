@@ -217,22 +217,31 @@ object RelationalQueries extends QueryPack {
         .groupBy(col("slot"), col("bucket"))
         .agg(min(col("d")).as("dmn"), max(col("d")).as("dmx"),
           count(lit(1)).as("cnt_rows"))
-      perBucket.groupBy(col("slot"))
+      val perSlot = perBucket.groupBy(col("slot"))
         .agg(count(lit(1)).as("n_buckets"),
           sum(col("cnt_rows")).as("n_rows"),
           sum(col("dmx") - col("dmn")).as("span_sum"),
           sum(when(col("dmn") <= lit(predHi) && col("dmx") >= lit(predLo),
             1L).otherwise(0L)).as("n_overlap"))
-        .select(
-          element_at(array(lit("l_shipdate"), lit("l_orderkey"),
-            lit("l_partkey")), col("slot") + 1).as("sort_key"),
-          col("n_buckets"), col("n_rows"),
+        .select(col("slot"), col("n_buckets"), col("n_rows"),
           graft.ops.TimeSeries.portableRound4(
             col("span_sum").cast("double") /
               col("n_buckets").cast("double")).as("avg_span_days"),
           graft.ops.TimeSeries.portableRound4(
             lit(1.0) - col("n_overlap").cast("double") /
               col("n_buckets").cast("double")).as("prune_frac"))
+      // Backfill the 3-slot frame (the sim_nprobe_sweep rule): on an
+      // empty lineitem no slot survives the groupBy, while the oracle's
+      // ungrouped per-candidate aggregate still emits one row each —
+      // n_buckets 0, every other figure NULL. One split, so the plan
+      // does not vary with the session's default parallelism.
+      s.range(0, 3, 1, 1).select(col("id").cast("int").as("slot"))
+        .join(broadcast(perSlot), Seq("slot"), "left")
+        .select(
+          element_at(array(lit("l_shipdate"), lit("l_orderkey"),
+            lit("l_partkey")), col("slot") + 1).as("sort_key"),
+          coalesce(col("n_buckets"), lit(0L)).as("n_buckets"),
+          col("n_rows"), col("avg_span_days"), col("prune_frac"))
     },
 
     // Hilbert clustering value — Z-order's better-locality sibling

@@ -10,8 +10,8 @@ import graft.streaming.UdSource.{GraftSource, SourceRecord}
   * built for: each adapter encodes its broker's DELIVERY SEMANTICS —
   * offsets, ack shape, replay behavior — while the network client is an
   * injected interface (no broker client libraries ship in this engine;
-  * production binds the real SDK, tests bind a fake, and the semantics
-  * under test are identical).
+  * the JDK-only `*Wire` clients bind it over real sockets, tests may
+  * bind a fake, and the semantics under test are identical).
   *
   * Semantics per the reference:
   *  - SQS (`rust/extns/numaflow-sqs/src/source.rs`): receive → in-flight
@@ -49,7 +49,7 @@ object Connectors {
 
   // ---- SQS (S7 source, K5 sink) -----------------------------------------
 
-  /** Injected transport: the AWS SDK surface the adapter needs. */
+  /** Injected transport: the SQS calls the adapter needs. */
   trait SqsClient {
     /** (receiptHandle, messageId, body, attributes). */
     def receive(max: Int): Seq[(String, String, Array[Byte], Map[String, String])]

@@ -11,11 +11,10 @@ import graft.streaming.Connectors.JetStreamConsumer
   * (`rust/extns/numaflow-nats/src/jetstream.rs`: durable consumer,
   * integer stream sequences as offsets, cumulative AckAll): the JS API
   * is plain JSON request-reply over core NATS subjects, so this rides
-  * the same wire framing as [[NatsWire]] and implements the same
-  * [[Connectors.JetStreamConsumer]] seam as the jnats-backed
-  * [[JetStreamSdk]] — giving S5 a live-TCP path that is testable in
-  * this build (JetStreamWireSpec drives create → next → ack against an
-  * in-process stub; `io.nats:jnats` itself is absent and unfetchable).
+  * the same wire framing as [[NatsWire]] and implements the
+  * [[Connectors.JetStreamConsumer]] seam with no `io.nats:jnats` jar —
+  * giving S5 a live-TCP path (JetStreamWireSpec drives create → next →
+  * ack against an in-process stub).
   *
   * Protocol subset (client side):
   *  - `$JS.API.STREAM.INFO.<stream>` → `{"state":{"last_seq":N}}`.
@@ -43,9 +42,9 @@ import graft.streaming.Connectors.JetStreamConsumer
   * reply, so the discriminator is unambiguous), and request JSON is
   * parsed with anchored field extraction rather than a JSON tree (the
   * fields are flat integers/strings in a protocol this client also
-  * authors). Against a real nats-server, use [[JetStreamSdk]] (the
-  * gated jnats binding) — this class's job is the wire-path proof and
-  * a dependency-free loopback transport.
+  * authors). These two simplifications make it a dependency-free
+  * loopback transport and wire-path proof, not a full client for a
+  * production nats-server.
   *
   * Single-threaded by design: every call performs its own blocking
   * request-reply on the one socket (no reader thread, no shared state),

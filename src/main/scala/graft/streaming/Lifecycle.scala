@@ -32,7 +32,6 @@ object Lifecycle {
     def closeGate(): Unit =
       frozen = Some(inner.partitions.map(p => p -> inner.latestOffset(p)).toMap)
     def openGate(): Unit = frozen = None
-    def gateClosed: Boolean = frozen.isDefined
 
     /** Closed-gate BROKER-visible drain: every offset exposed before the
       * gate closed has been ACKED back to the inner source. NOTE the

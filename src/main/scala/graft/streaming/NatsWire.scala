@@ -7,15 +7,11 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 /** Socket-level CORE NATS transport — the engine's own implementation of
   * the (public, line-based) NATS client protocol: `INFO` → `CONNECT` →
-  * `SUB`/`PUB` → `MSG`, `PING`/`PONG` keepalive. Implements the same
-  * injected [[Connectors.NatsSubscription]] transport as the jnats
-  * binding in [[NatsCoreSdk]], with zero dependencies beyond the JDK —
-  * the at-most-once core-NATS source (S4,
-  * `rust/extns/numaflow-nats/src/nats.rs`) therefore has a wire path
-  * that is testable in this build: `io.nats:jnats` is NOT on the
-  * runtime classpath here (and cannot be fetched — no egress), so the
-  * MethodHandle surface in [[NatsCoreSdk]] stays a classpath gate while
-  * THIS client is exercised end-to-end over a real loopback socket
+  * `SUB`/`PUB` → `MSG`, `PING`/`PONG` keepalive. Implements the
+  * injected [[Connectors.NatsSubscription]] transport with zero
+  * dependencies beyond the JDK, so the at-most-once core-NATS source
+  * (S4, `rust/extns/numaflow-nats/src/nats.rs`) needs no `io.nats:jnats`
+  * jar. It is exercised end-to-end over a real loopback socket
   * (NatsWireSpec, against an in-process stub broker).
   *
   * Protocol notes (client side): one `INFO {...}` line arrives on

@@ -13,13 +13,11 @@ import java.util.zip.CRC32C
   * `SEND`/`SEND_RECEIPT` (payload frames with the 0x0e01 magic + CRC32C
   * checksum), `SUBSCRIBE`/`SUCCESS`, additive `FLOW` permits, pushed
   * `MESSAGE` frames, cumulative `ACK`, and `PING`/`PONG` keepalive.
-  * Implements the same injected [[Connectors.PulsarConsumer]] seam as the
-  * classpath-gated pulsar-client binding in [[PulsarSdk]], with zero
-  * dependencies beyond the JDK — so the Pulsar source/sink path
-  * (reference `rust/extns/numaflow-pulsar/src/source.rs`, `sink.rs`) has
-  * live-TCP evidence in this build (PulsarWireSpec drives an in-process
-  * stub broker over a real loopback socket; the official client jar is
-  * absent and unfetchable here).
+  * Implements the injected [[Connectors.PulsarConsumer]] seam with zero
+  * dependencies beyond the JDK (no pulsar-client jar), so the Pulsar
+  * source/sink path (reference `rust/extns/numaflow-pulsar/src/source.rs`,
+  * `sink.rs`) has live-TCP evidence: PulsarWireSpec drives an in-process
+  * stub broker over a real loopback socket.
   *
   * Protocol notes (all public — pulsar.apache.org "binary protocol"):
   *  - Simple frame: `[totalSize i32][commandSize i32][BaseCommand pb]`.
@@ -37,9 +35,9 @@ import java.util.zip.CRC32C
   *    moves the subscription's mark-delete cursor; a re-subscribe resumes
   *    AFTER it, redelivering unacked messages (at-least-once).
   *
-  * The adapter-id bookkeeping matches [[PulsarSdk]]: the engine seam
-  * speaks monotone local Longs; this client keeps the local-id →
-  * (ledgerId, entryId) map until the cumulative ack releases the prefix.
+  * Adapter-id bookkeeping: the engine seam speaks monotone local Longs;
+  * this client keeps the local-id → (ledgerId, entryId) map until the
+  * cumulative ack releases the prefix.
   */
 object PulsarWire {
 

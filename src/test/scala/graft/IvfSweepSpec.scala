@@ -28,4 +28,29 @@ class IvfSweepSpec extends SparkSpec {
       assert(ref.count() > 0, s"empty reference at nProbe=$np")
     }
   }
+
+  test("an empty width list is rejected up front") {
+    val emb = Tables.embeddings(spark, sf("sf0.001"))
+    val assigned = Similarity.ivfAssign(emb, "vec_id", "embedding", nLists = 16)
+    val e = intercept[IllegalArgumentException] {
+      Similarity.ivfTopKSweepFromAssigned(assigned, emb, "vec_id",
+        "embedding", k = 5, nLists = 16, nProbes = Seq.empty)
+    }
+    assert(e.getMessage.contains("nProbes is empty"))
+  }
+
+  test("a repeated width yields one leg, not a duplicate column") {
+    val emb = Tables.embeddings(spark, sf("sf0.001"))
+    val queries = emb.where(col("vec_id") < 10)
+    val assigned = Similarity.ivfAssign(emb, "vec_id", "embedding",
+      nLists = 16).localCheckpoint()
+    def sweep(widths: Seq[Int]) = Similarity.ivfTopKSweepFromAssigned(
+      assigned, queries, "vec_id", "embedding", k = 5, nLists = 16,
+      nProbes = widths)
+    val repeated = sweep(Seq(2, 4, 2, 4)).localCheckpoint()
+    val once = sweep(Seq(2, 4))
+    assert(repeated.exceptAll(once).count() === 0)
+    assert(once.exceptAll(repeated).count() === 0)
+    assert(repeated.select("nprobe").distinct().count() === 2)
+  }
 }

@@ -17,9 +17,7 @@ import graft.streaming.{Connectors, JetStreamWire, NatsWire}
   * reference semantics (`rust/extns/numaflow-nats/src/jetstream.rs`:
   * durable consumer, integer stream sequences as offsets, cumulative
   * AckAll, restart-resumes-from-ack-floor) proven over a live socket,
-  * the proof S4 got from NatsWireSpec. The jnats-backed
-  * [[graft.streaming.JetStreamSdk]] stays the real-server binding
-  * (classpath-gated; the jar is absent and unfetchable here). */
+  * the proof S4 got from NatsWireSpec. */
 class JetStreamWireSpec extends AnyFunSuite {
 
 

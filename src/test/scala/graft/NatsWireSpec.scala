@@ -14,9 +14,7 @@ import graft.streaming.{Connectors, NatsWire}
   * handshakes, subscribes, and drains binary-safe payloads, and the
   * engine's [[Connectors.NatsSource]] adapter runs its at-most-once
   * buffer/ack semantics over that live socket — the whole S4 stack
-  * minus only the jnats jar, which is absent from this build's
-  * classpath (no egress; [[graft.streaming.NatsCoreSdk]] stays a
-  * classpath gate, BrokerSdkSpec). */
+  * with no jnats jar. */
 class NatsWireSpec extends AnyFunSuite {
 
   /** Minimal loopback NATS broker: exact-subject routing, one thread per

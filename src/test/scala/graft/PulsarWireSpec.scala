@@ -18,9 +18,7 @@ import graft.streaming.PulsarWire.{Frame, Pb, T, baseCmd}
   * consume → ack → re-subscribe redelivery against it. S6/K4's reference
   * semantics (`rust/extns/numaflow-pulsar/src/source.rs`: cumulative ack,
   * redelivery of the unacked suffix, keyed produce) proven over a live
-  * socket, the proof S4/S5/S7 got from their wire specs. The
-  * pulsar-client-backed [[graft.streaming.PulsarSdk]] stays the
-  * real-server binding (classpath-gated; the jar is absent here).
+  * socket, the proof S4/S5/S7 got from their wire specs.
   *
   * Two layout pins keep the shared-codec round-trip honest (client and
   * stub reuse [[PulsarWire.Frame]], so a layout bug could cancel out):

@@ -15,8 +15,7 @@ import graft.streaming.{Connectors, SqsWire}
   * reappear — and [[SqsWire]] drives receive → delete-on-ack against
   * it, plus the [[Connectors.SqsSource]] adapter's offset/ack/pending
   * contract over the live socket (S7/K5's proof, the NatsWireSpec
-  * pattern; the AWS SDK jar is absent and unfetchable here, so
-  * [[graft.streaming.SqsSdk]] stays a classpath gate). */
+  * pattern, with no AWS SDK jar). */
 class SqsWireSpec extends AnyFunSuite {
 
   /** In-memory SQS-compatible queue over JDK HttpServer. Messages get
