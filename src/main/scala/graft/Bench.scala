@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Benchmark main (driver contract): one JSON line with per-query wall
   * times at SPARK_GRAFT_SF_DIR.
   *
@@ -9,28 +11,34 @@ package graft
   */
 object Bench {
 
+  /** Wall seconds to build query `name` and evaluate its full result
+    * through the noop sink — the one timing loop of Bench, MicroBench
+    * and Profile. The cache is cleared afterwards, outside the timed
+    * span: operators that persist intermediates (simhash signatures)
+    * must not occupy memory for later queries or reuse them across reps.
+    * NO explicit System.gc() here: a forced full GC evicts the
+    * soft-referenced codegen class cache, and re-compiling generated
+    * code made the heaviest queries ~7x slower (measured) — far worse
+    * than the 2-7x GC-timing noise it was meant to remove. */
+  def timeQuery(spark: SparkSession, sfDir: String, name: String): Double = {
+    val t0 = System.nanoTime()
+    try {
+      SparkEntry.queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    } finally spark.sharedState.cacheManager.clearCache()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.bench()
 
-    def run(name: String): Double = {
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+    def run(name: String): Double =
+      try timeQuery(spark, sfDir, name)
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        return -1.0
+        -1.0
       }
-      val t = (System.nanoTime() - t0) / 1e9
-      // per-query isolation: operators that persist intermediates
-      // (simhash signatures) must not occupy memory for later queries.
-      // NO explicit System.gc() here: a forced full GC evicts the
-      // soft-referenced codegen class cache, and re-compiling generated
-      // code made the heaviest queries ~7x slower (measured) — far worse
-      // than the 2-7x GC-timing noise it was meant to remove.
-      spark.sharedState.cacheManager.clearCache()
-      t
-    }
 
     // Warm the JVM/codegen paths once on a cheap query before timing.
     run("q1_agg")
@@ -45,12 +53,7 @@ object Bench {
     // reps hit the query's own freshly-compiled codegen, matching what
     // MicroBench measures in isolation.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    // SPARK_GRAFT_BENCH_ONLY=a,b,c restricts the sweep — isolated
-    // re-measures when a full-sweep number looks like cross-talk
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
     val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.isEmpty || only(n))
     var coldTotal = 0.0
     val results = names.map { n =>
       val ts = (1 to reps).map(_ => run(n))
@@ -94,9 +97,7 @@ object Bench {
     // Full per-query detail goes to the well-known file and to stdout
     // for the human log.
     println(json)
-    // a subset run must not clobber the full sweep's detail file
-    if (only.isEmpty)
-      java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_LAST.json"), json)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_LAST.json"), json)
     spark.stop()
 
     // The LAST stdout line is the driver's artifact, and the driver

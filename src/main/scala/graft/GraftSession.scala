@@ -2,13 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one place a main builds its Spark session. Every entry point runs
-  * on the same local-session policy:
+/** The one place a Spark session is built, for every main and every
+  * spec. Engine confs are set here, once, when the session is built:
+  * operators and loaders never write the session's conf, so no plan
+  * depends on which query the session built first. The local-session
+  * policy:
   *  - `local[cores]` with shuffle partitions equal to cores;
   *  - UTC session time zone;
-  *  - the UI off.
+  *  - the UI off;
+  *  - the engine confs in [[EngineConf]].
   * A main adds only what differs for it (`extra` confs, a log level),
-  * and the timed mains and Verify add [[applyBenchConf]] on top.
+  * and the timed mains and Verify add [[BenchConf]] on top.
   */
 object GraftSession {
 
@@ -16,6 +20,20 @@ object GraftSession {
     * available processors. Read once per JVM. */
   lazy val cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** Confs the engine's queries need to plan and read correctly. A
+    * session built without them (a library user's own builder) must set
+    * them too:
+    *  - rank filters up to the registry's max top-k (65536) rewrite to a
+    *    map-side WindowGroupLimit; at Spark's default threshold of 1000,
+    *    vocab_entropy's per-source clamp stays a full window sort. It
+    *    only enables pruning for k ≤ 65536 and changes no other plan.
+    *  - parquet TIMESTAMP(NANOS), written by older test-data generations
+    *    for `events.ts`, is readable only as a raw long;
+    *    [[graft.ops.Tables.events]] converts it. */
+  val EngineConf: Map[String, String] = Map(
+    "spark.sql.optimizer.windowGroupLimitThreshold" -> "65536",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
   /** State-store confs of the streaming benchmarks. Shuffle partitions
     * fix the number of STATE STORE instances per stateful operator, and
@@ -39,7 +57,7 @@ object GraftSession {
     Seq("spark.master" -> s"local[$cores]",
       "spark.sql.shuffle.partitions" -> cores.toString,
       "spark.sql.session.timeZone" -> "UTC",
-      "spark.ui.enabled" -> "false") ++ extra
+      "spark.ui.enabled" -> "false") ++ EngineConf ++ extra
 
   /** A session built from [[settings]] (or the existing one, with these
     * SQL confs applied), logging at `logLevel`. */
@@ -58,8 +76,10 @@ object GraftSession {
     * under exactly the bench configuration, so result-identity of these
     * settings is certified, not assumed. Both are scale-adaptive /
     * scale-inert (OPTIMIZATION_r15.md §global):
-    *  - scan fan-out (see Tables.maybeFanOut): repartitions a fact table
-    *    only while its files underfill the cluster; identity at scale.
+    *  - scan fan-out (see [[graft.ops.Tables.fanned]]): repartitions a
+    *    fact table only while its files underfill the cluster; identity
+    *    at scale. `SPARK_GRAFT_FANOUT=false` turns it off, for an oracle
+    *    pass without fan-out.
     *  - AQE coalesce floor: AQE's byte-targeted coalescing treats
     *    partition BYTES as the whole cost model, so a CPU-heavy stage
     *    over a small shuffle (posting-list pair expansion, resample
@@ -67,21 +87,13 @@ object GraftSession {
     *    stages at sf0.1). 64 KiB keeps parallelism available for such
     *    stages; at cluster scale post-shuffle partitions sit far above
     *    any sane floor, so the setting is inert there. */
-  def applyBenchConf(spark: SparkSession): Unit = {
-    spark.conf.set("spark.graft.scan.fanout",
-      sys.env.getOrElse("SPARK_GRAFT_FANOUT", "true"))
-    spark.conf.set("spark.graft.scan.fanout.taskBytes",
-      sys.env.getOrElse("SPARK_GRAFT_FANOUT_TASK_BYTES", "65536"))
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
-  }
+  val BenchConf: Map[String, String] = Map(
+    "spark.graft.scan.fanout" -> sys.env.getOrElse("SPARK_GRAFT_FANOUT", "true"),
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k")
 
-  /** [[local]] plus [[applyBenchConf]]: the session the oracle gate and
-    * the timed mains share. */
+  /** [[local]] with [[BenchConf]]: the session the oracle gate and the
+    * timed mains share. */
   def bench(extra: Map[String, String] = Map.empty,
-            logLevel: String = "WARN"): SparkSession = {
-    val spark = local(extra = extra, logLevel = logLevel)
-    applyBenchConf(spark)
-    spark
-  }
+            logLevel: String = "WARN"): SparkSession =
+    local(extra = BenchConf ++ extra, logLevel = logLevel)
 }

@@ -60,20 +60,9 @@ object MicroBench {
     val names = if (artifact) Sentinels else args.toSeq
     val spark = GraftSession.bench()
 
-    def once(name: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    once("q1_agg") // warm codegen/JIT
+    Bench.timeQuery(spark, sfDir, "q1_agg") // warm codegen/JIT
     val mins = names.map { name =>
-      val ts = (1 to reps).map { _ =>
-        val t = once(name)
-        spark.sharedState.cacheManager.clearCache() // no cross-rep reuse
-        t
-      }
+      val ts = (1 to reps).map(_ => Bench.timeQuery(spark, sfDir, name))
       println(f"MICRO $name min=${ts.min}%.2f all=${ts.map(t => f"$t%.2f").mkString(",")}")
       name -> ts.min
     }

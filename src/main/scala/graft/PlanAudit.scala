@@ -27,20 +27,21 @@ object PlanAudit {
     * rounds at the same input. */
   val FingerprintSf = "/root/testdata/sf0.01"
 
-  /** Session with the bench-shaped confs pinned, so fingerprints are
-    * reproducible from any entry point (main or spec). Cores are pinned
-    * at 32 whatever the host: the shuffle partition count is part of
-    * every plan hash. The windowGroupLimitThreshold is pre-set to the
-    * registry's max top-k: one query builder raises it at build time, so
-    * pinning it here removes any dependence on query build ORDER.
-    * Metadata strings (DataFilters/PushedFilters) truncate at a char
-    * budget, and WHERE the "..." cut lands depends on expression-id
-    * digit counts — which vary with session history. Untruncated text +
-    * id-stripping is deterministic; truncated text is not. */
-  def fingerprintSession(): SparkSession =
-    GraftSession.local(cores = 32, logLevel = "ERROR", extra = Map(
-      "spark.sql.optimizer.windowGroupLimitThreshold" -> "65536",
-      "spark.sql.maxMetadataStringLength" -> "100000"))
+  /** Task slots of the fingerprint session. A few plans print the
+    * default parallelism (a `range`'s splits), so PlanManifestSpec's
+    * shared test session and this main must run on the same master. */
+  val FingerprintCores = 4
+
+  /** Fingerprint confs on top of the local-session policy. The shuffle
+    * partition count is part of every plan hash, so it is pinned at 32
+    * whatever the host. Metadata strings (DataFilters/PushedFilters)
+    * truncate at a char budget, and WHERE the "..." cut lands depends on
+    * expression-id digit counts — which vary with session history.
+    * Untruncated text + id-stripping is deterministic; truncated text is
+    * not. */
+  val FingerprintConf: Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> "32",
+    "spark.sql.maxMetadataStringLength" -> "100000")
 
   /** Normalized physical-plan text: expression ids (`#123`), plan ids,
     * and object addresses stripped — everything else (operator tree,
@@ -97,7 +98,8 @@ object PlanAudit {
   }
 
   private def runFingerprint(round: Int, sfDir: String): Unit = {
-    val spark = fingerprintSession()
+    val spark = GraftSession.local(cores = FingerprintCores, logLevel = "ERROR",
+      extra = FingerprintConf)
     val names = SparkEntry.queries.keys.toSeq.sorted
     val hashes = names.map { n => n -> fingerprint(spark, n, sfDir) }
     val body = hashes.map { case (n, h) => s""""$n":"$h"""" }.mkString(",")

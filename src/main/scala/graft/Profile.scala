@@ -24,9 +24,7 @@ object Profile {
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
     val names = args.toSeq
     require(names.nonEmpty, "usage: runMain graft.Profile <query...>")
-    val spark = GraftSession.local()
-    if (sys.env.getOrElse("SPARK_GRAFT_BENCHCONF", "true") == "true")
-      GraftSession.applyBenchConf(spark)
+    val spark = GraftSession.bench()
 
     val stages = mutable.ArrayBuffer[St]()
     val taskMax = mutable.Map[Int, Long]().withDefaultValue(0L)
@@ -56,14 +54,7 @@ object Profile {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    def once(name: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      val t = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      t
-    }
+    def once(name: String): Double = Bench.timeQuery(spark, sfDir, name)
 
     once("q1_agg") // warm session
     names.foreach { name =>

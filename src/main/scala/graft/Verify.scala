@@ -9,7 +9,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
     // the oracle gate certifies results under the BENCH configuration
-    // (scan fan-out etc.) — see GraftSession.applyBenchConf
+    // (scan fan-out etc.) — see GraftSession.BenchConf
     val spark = GraftSession.bench()
     new java.io.File(outDir).mkdirs()
     // Queries are independent read-only plans writing to disjoint dirs:

@@ -10,17 +10,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * behind a catalog; the loader is the single seam where that swap happens.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Engine-required session conf, applied at the one seam EVERY query
-    // builder passes through, so no plan depends on which query was
-    // built first: rank filters up to the registry's max top-k (65536)
-    // must rewrite to WindowGroupLimit (map-side top-k pruning; the
-    // Spark default threshold of 1000 would leave vocab_entropy's
-    // per-source clamp as a full window sort). Monotone: it only
-    // ENABLES pruning for k ≤ 65536, never changes a non-rank plan.
-    spark.conf.set("spark.sql.optimizer.windowGroupLimitThreshold", 65536)
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
-  }
 
   /** The fact tables' stable ids — the deterministic hash fan-out keys. */
   private val FanOutKeys = Map(
@@ -82,16 +73,13 @@ object Tables {
     * hundred KB raw — enough work per task for the CPU-heavy kernels
     * fan-out exists for, measured indistinguishable from full-width on
     * the r15 winner set at 32 cores (OPTIMIZATION_r16.md) while
-    * capping task explosion. Conf-overridable for A/B. */
-  private def fanTaskBytes(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.scan.fanout.taskBytes")
-      .map(_.toLong).getOrElse(64L * 1024)
+    * capping task explosion. */
+  private val FanOutTaskBytes = 64L * 1024
 
   /** Data-proportional fan-out width: fills cores proportionally to the
     * table's bytes, converges to `defaultParallelism` as data grows. */
-  def fanWidth(spark: SparkSession, dir: String, name: String): Int = {
-    val perTask = math.max(1L, fanTaskBytes(spark))
-    val w = (tableBytes(dir, name) + perTask - 1) / perTask
+  private def fanWidth(spark: SparkSession, dir: String, name: String): Int = {
+    val w = (tableBytes(dir, name) + FanOutTaskBytes - 1) / FanOutTaskBytes
     math.min(spark.sparkContext.defaultParallelism.toLong,
       math.max(2L, w)).toInt
   }
@@ -114,10 +102,8 @@ object Tables {
       } else java.nio.file.Files.size(p)
     } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
 
-  /** True exactly when [[fanned]] would repartition — the same gate for
-    * builders that fan out a DERIVED frame (a narrow projection shared
-    * by several consumers) instead of the raw scan. */
-  def fanOutActive(spark: SparkSession, dir: String, name: String): Boolean =
+  /** True exactly when [[fanned]] repartitions. */
+  private def fanOutActive(spark: SparkSession, dir: String, name: String): Boolean =
     spark.conf.getOption("spark.graft.scan.fanout").contains("true") &&
       tableBytes(dir, name) < FanOutMaxBytes
 
@@ -133,9 +119,10 @@ object Tables {
     * Spark only reads as a raw long (legacy conf). Branch on the loaded
     * dtype so both encodings land on the same microsecond TIMESTAMP_NTZ —
     * the precision DuckDB reads natively, so oracle values align — and
-    * NTZ (not TIMESTAMP) keeps values timezone-free end to end. */
+    * NTZ (not TIMESTAMP) keeps values timezone-free end to end. The
+    * legacy conf is one of [[graft.GraftSession.EngineConf]]; without it
+    * a NANOS file fails to read. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(spark, dir, "events")
     import org.apache.spark.sql.functions.{expr, timestamp_micros}
     import org.apache.spark.sql.types.LongType

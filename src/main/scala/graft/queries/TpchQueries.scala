@@ -236,19 +236,22 @@ object TpchQueries extends QueryPack {
     },
 
     // TPC-H Q11 shape (important stock — partsupp-free analog: traded
-    // value per part): parts whose total lineitem value exceeds 1/1500
-    // of the GLOBAL total — the share-of-global-total HAVING pattern.
-    // One per-part aggregate; the 1-row global total broadcasts and the
-    // HAVING compares value·1500 > total in exact DECIMAL — no float
+    // value per part): parts whose total lineitem value exceeds 1.5× the
+    // per-part mean — the share-of-global-total HAVING pattern. The
+    // threshold scales with sf (a fixed fraction of the total, such as
+    // 1/1500, selects no part at sf0.1). One per-part aggregate; the
+    // 1-row global total and part count broadcast, and the HAVING
+    // compares value·2·n_parts > 3·total in exact DECIMAL — no float
     // fraction for a borderline part to straddle.
     "q11_important" -> { (s, dir) =>
       val perPart = Tables.lineitem(s, dir)
         .groupBy(col("l_partkey"))
         .agg(sum(dec(col("l_extendedprice"))).as("value"))
         .localCheckpoint()
-      val total = perPart.agg(sum(col("value")).as("total"))
+      val total = perPart.agg(sum(col("value")).as("total"),
+        count(lit(1)).as("n_parts"))
       perPart.join(broadcast(total))
-        .where(col("value") * 1500 > col("total"))
+        .where(col("value") * 2 * col("n_parts") > col("total") * 3)
         .select(col("l_partkey"), col("value").cast("double").as("value"))
     },
 
@@ -424,9 +427,9 @@ object TpchQueries extends QueryPack {
       """WITH pv AS (SELECT l_partkey,
         |    sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS v
         |  FROM lineitem GROUP BY 1),
-        |t AS (SELECT sum(v) AS total FROM pv)
+        |t AS (SELECT sum(v) AS total, count(*) AS n_parts FROM pv)
         |SELECT l_partkey, CAST(v AS DOUBLE) AS value
-        |FROM pv, t WHERE v * 1500 > total""".stripMargin,
+        |FROM pv, t WHERE v * 2 * n_parts > 3 * total""".stripMargin,
     "q16_supplier_cnt" ->
       """SELECT p_brand, p_type, p_size,
         |  CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt

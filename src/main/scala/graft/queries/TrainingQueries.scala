@@ -2748,9 +2748,9 @@ object TrainingQueries extends QueryPack {
     // 3.5e16, DECIMAL(38,0). The rank window ranks the post-agg CELL
     // table (vocab-sized), not the corpus.
     "vocab_entropy" -> { (s, dir) =>
-      // windowGroupLimitThreshold ≥ 65536 (set in Tables.table, the
-      // shared loader seam) is what lets the rank filter below rewrite
-      // to a map-side WindowGroupLimit — PlanShapeSpec asserts it
+      // windowGroupLimitThreshold ≥ 65536 (GraftSession.EngineConf, set
+      // when the session is built) is what lets the rank filter below
+      // rewrite to a map-side WindowGroupLimit — PlanShapeSpec asserts it
       val d38 = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
       val counts = Tables.documents(s, dir)
         .select(col("source"), explode(split(col("text"), " ")).as("w"))

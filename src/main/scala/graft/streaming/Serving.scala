@@ -255,15 +255,19 @@ final class ServingEndpoint(port: Int, syncTimeoutMs: Long = 30000,
         val id = reqId(ex)
         val slot = admit(ex, id)
         if (slot == null) return
-        try {
-          val fut = futureFor(id)
-          enqueue(id, ex.getRequestBody.readAllBytes())
-          try respond(ex, 200, fut.get(syncTimeoutMs, TimeUnit.MILLISECONDS))
-          catch { case _: TimeoutException => respond(ex, 504, s"timeout for $id".getBytes) }
-        } finally {
-          slot.release() // per-exchange: the sync request is done serving
-          evict(id)      // sync ids live one exchange: a 504 retry re-admits
-        }
+        // Release and evict BEFORE responding: a client that retries as
+        // soon as it reads the 504 must find the id free and the slot back.
+        val (code, body) =
+          try {
+            val fut = futureFor(id)
+            enqueue(id, ex.getRequestBody.readAllBytes())
+            try (200, fut.get(syncTimeoutMs, TimeUnit.MILLISECONDS))
+            catch { case _: TimeoutException => (504, s"timeout for $id".getBytes) }
+          } finally {
+            slot.release() // per-exchange: the sync request is done serving
+            evict(id)      // sync ids live one exchange: a 504 retry re-admits
+          }
+        respond(ex, code, body)
       }
     })
     s.createContext("/v1/process/async", new HttpHandler {
@@ -336,9 +340,10 @@ final class ServingEndpoint(port: Int, syncTimeoutMs: Long = 30000,
             }
           }
         } finally {
-          streams.remove(id); ex.close()
+          streams.remove(id)
           slot.release() // per-exchange: spans the WHOLE stream, not event #1
           evict(id)      // stream over: an SSE reconnect re-admits the id
+          ex.close()     // last, so a reconnect never sees the old stream's id
         }
       }
     })

@@ -73,14 +73,11 @@ object SnapshotCdc {
       .select(outCols: _*)
       .persist() // two consumers below; cache the merged buckets once
     try {
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try survivors.write.mode("overwrite").partitionBy("bucket")
-        .parquet(snapshotDir)
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      // dynamic: replace only the touched buckets. A write option, so a
+      // concurrent writer on the same session never sees the mode.
+      survivors.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket").parquet(snapshotDir)
       // Buckets whose rows were all tombstoned produce no output
       // partition — clear their directories explicitly.
       val alive = survivors.select("bucket").distinct()

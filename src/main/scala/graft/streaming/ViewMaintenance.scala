@@ -71,13 +71,11 @@ object ViewMaintenance {
     // the source files again.
     val survivors = merged.localCheckpoint()
     try {
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try survivors.write.mode("overwrite").partitionBy("bucket").parquet(viewDir)
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      // dynamic: replace only the touched buckets. A write option, so a
+      // concurrent writer on the same session never sees the mode.
+      survivors.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket").parquet(viewDir)
       // a bucket whose groups all died produces no output partition —
       // clear its directory so stale files don't resurrect it
       val alive = survivors.select("bucket").distinct()

@@ -43,6 +43,9 @@ class JetStreamWireSpec extends AnyFunSuite {
       * pulls. */
     @volatile var killOnNext = false
 
+    /** The listener is bound: false between a chaos kill and its restart. */
+    def listening: Boolean = !server.isClosed
+
     def ackFloor(durable: String): Long = synchronized(ackFloors.getOrElse(durable, 0L))
 
     private def readLine(in: InputStream): String = {
@@ -343,6 +346,10 @@ class JetStreamWireSpec extends AnyFunSuite {
         // ...and a recovered broker serves the SAME client again: the
         // budget bounds one outage, it does not poison the instance
         broker.killOnNext = false
+        // the last pull's kill may still be rebinding the port
+        val deadline = System.currentTimeMillis() + 5000
+        while (!broker.listening && System.currentTimeMillis() < deadline)
+          Thread.sleep(5)
         assert(js.fetch(1L, 4L).map(_._1) == Seq(1L, 2L, 3L))
       } finally js.close()
     } finally broker.close()

@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Structural guard for the committed plan-fingerprint manifest (r14
   * verdict #3): silent plan regressions must surface as a git diff of
   * PLANS_rN.json, not as cross-round timing archaeology. This spec
@@ -11,11 +8,19 @@ import org.scalatest.funsuite.AnyFunSuite
   * sentinel query (the MicroBench set: TPC-H analogs + the heaviest
   * registry entries + the known sweep movers) reproduces the committed
   * hash. A failure names the stale queries and the regeneration command.
+  * It fingerprints on a child of the shared test session, which has the
+  * fingerprint main's master; the child carries the fingerprint confs,
+  * so the shared session's confs stay untouched.
   */
-class PlanManifestSpec extends AnyFunSuite {
+class PlanManifestSpec extends SparkSpec {
 
   test("newest committed PLANS_r*.json covers the registry and is fresh " +
       "for the sentinel subset") {
+    // touch the shared session first: if this suite runs first in the
+    // JVM, it builds the session at the spec policy's master
+    assert(spark.sparkContext.defaultParallelism === PlanAudit.FingerprintCores,
+      "the shared test session and `PlanAudit --fingerprint` must run on " +
+        "the same master: some plans print the default parallelism")
     PlanAudit.newestManifest() match {
       case None =>
         fail("no PLANS_r*.json committed — generate one with " +
@@ -30,40 +35,23 @@ class PlanManifestSpec extends AnyFunSuite {
             s"extra: ${extra.toSeq.sorted.mkString(",")} — regenerate " +
             s"with `runMain graft.PlanAudit --fingerprint $round`")
 
-        // fingerprintSession applies its runtime confs to the shared
-        // test session; snapshot and restore the two confs no other
-        // suite re-pins in its own builder
-        val prior = SparkSession.getActiveSession
-          .orElse(SparkSession.getDefaultSession)
-        val saved = prior.map { s =>
-          Seq("spark.sql.adaptive.enabled",
-            "spark.sql.optimizer.windowGroupLimitThreshold",
-            "spark.sql.maxMetadataStringLength")
-            .map(k => k -> s.conf.getOption(k))
+        val fp = spark.newSession()
+        PlanAudit.FingerprintConf.foreach { case (k, v) => fp.conf.set(k, v) }
+        val sentinels = MicroBench.Sentinels
+        val unknown = sentinels.filterNot(registry.contains)
+        assert(unknown.isEmpty,
+          s"MicroBench.Sentinels names unknown queries: ${unknown.mkString(",")}")
+        assert(sentinels.distinct.size == sentinels.size,
+          "MicroBench.Sentinels contains duplicates: " +
+            sentinels.diff(sentinels.distinct).distinct.mkString(","))
+        val stale = sentinels.filter { n =>
+          PlanAudit.fingerprint(fp, n, PlanAudit.FingerprintSf) != manifest(n)
         }
-        val spark = PlanAudit.fingerprintSession()
-        try {
-          val sentinels = MicroBench.Sentinels
-          val unknown = sentinels.filterNot(registry.contains)
-          assert(unknown.isEmpty,
-            s"MicroBench.Sentinels names unknown queries: ${unknown.mkString(",")}")
-          assert(sentinels.distinct.size == sentinels.size,
-            "MicroBench.Sentinels contains duplicates: " +
-              sentinels.diff(sentinels.distinct).distinct.mkString(","))
-          val stale = sentinels.filter { n =>
-            PlanAudit.fingerprint(spark, n, PlanAudit.FingerprintSf) != manifest(n)
-          }
-          assert(stale.isEmpty,
-            s"PLANS_r$round.json is STALE for: ${stale.mkString(", ")} — " +
-              s"the plan changed since the manifest was generated; rerun " +
-              s"`runMain graft.PlanAudit --fingerprint <round>` and commit " +
-              s"the diff (that diff IS the plan-change acknowledgment)")
-        } finally saved.foreach { kvs =>
-          kvs.foreach {
-            case (k, Some(v)) => spark.conf.set(k, v)
-            case (k, None) => spark.conf.unset(k)
-          }
-        }
+        assert(stale.isEmpty,
+          s"PLANS_r$round.json is STALE for: ${stale.mkString(", ")} — " +
+            s"the plan changed since the manifest was generated; rerun " +
+            s"`runMain graft.PlanAudit --fingerprint <round>` and commit " +
+            s"the diff (that diff IS the plan-change acknowledgment)")
     }
   }
 }

@@ -3,15 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs (one per suite, lazily built). */
+/** Shared local SparkSession for specs (one per JVM, lazily built), on
+  * the same session policy and engine confs as the mains. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(cores = 4,
+    extra = Map("spark.app.name" -> getClass.getSimpleName))
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 
