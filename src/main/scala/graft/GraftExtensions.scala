@@ -34,131 +34,79 @@ object GraftExtensions {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.graftcompat.ColumnCompat
 
+  /** A SQL function registration: name, doc and expression builder. */
+  type Fn = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
   private def info(name: String, usage: String): ExpressionInfo =
     new ExpressionInfo(classOf[CosineSimilarity].getCanonicalName, null, name,
       usage, "", "", "", "", "", "", "built-in")
 
-  val cosineSimilarity: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("cosine_similarity"),
-    info("cosine_similarity",
-      "_FUNC_(a, b) - cosine similarity of two array<double> vectors (codegen)"),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2, "cosine_similarity takes exactly 2 arguments")
-      CosineSimilarity(exprs.head, exprs(1))
+  /** A native expression's registration; the builder checks the argument
+    * count first. */
+  private def native(name: String, arity: Int, usage: String)(
+      build: Seq[Expression] => Expression): Fn =
+    (FunctionIdentifier(name), info(name, usage), (exprs: Seq[Expression]) => {
+      require(exprs.length == arity, s"$name takes exactly $arity arguments")
+      build(exprs)
     })
 
-  val sortedJaccard: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("sorted_jaccard"),
-    info("sorted_jaccard",
-      "_FUNC_(a, b) - jaccard of two sorted distinct array<bigint> sets (codegen)"),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2, "sorted_jaccard takes exactly 2 arguments")
-      graft.functions.SortedJaccard(exprs.head, exprs(1))
-    })
+  val cosineSimilarity: Fn = native("cosine_similarity", 2,
+    "_FUNC_(a, b) - cosine similarity of two array<double> vectors (codegen)")(
+    e => CosineSimilarity(e.head, e(1)))
 
-  val multisetIntersect: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("multiset_intersect"),
-    info("multiset_intersect",
-      "_FUNC_(a, b) - clipped match count of two sorted array<bigint> multisets (codegen)"),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2, "multiset_intersect takes exactly 2 arguments")
-      graft.functions.MultisetIntersect(exprs.head, exprs(1))
-    })
+  val sortedJaccard: Fn = native("sorted_jaccard", 2,
+    "_FUNC_(a, b) - jaccard of two sorted distinct array<bigint> sets (codegen)")(
+    e => graft.functions.SortedJaccard(e.head, e(1)))
 
-  val sortedArrayContains: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("sorted_array_contains"),
-    info("sorted_array_contains",
-      "_FUNC_(arr, key) - binary-search membership in a sorted array<string> (codegen)"),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2, "sorted_array_contains takes exactly 2 arguments")
-      graft.functions.SortedArrayContains(exprs.head, exprs(1))
-    })
+  val multisetIntersect: Fn = native("multiset_intersect", 2,
+    "_FUNC_(a, b) - clipped match count of two sorted array<bigint> multisets (codegen)")(
+    e => graft.functions.MultisetIntersect(e.head, e(1)))
+
+  val sortedArrayContains: Fn = native("sorted_array_contains", 2,
+    "_FUNC_(arr, key) - binary-search membership in a sorted array<string> (codegen)")(
+    e => graft.functions.SortedArrayContains(e.head, e(1)))
 
   private def litInt(e: Expression, arg: String): Int = e match {
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
     case _ => throw new IllegalArgumentException(s"$arg must be an int literal")
   }
 
-  val wordShingles: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("word_shingles"),
-    info("word_shingles",
-      "_FUNC_(text, w) - w-token space-joined shingles, one split per row (codegen)"),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2, "word_shingles takes exactly 2 arguments")
-      graft.functions.WordShingles(exprs.head, litInt(exprs(1), "w"))
-    })
+  val wordShingles: Fn = native("word_shingles", 2,
+    "_FUNC_(text, w) - w-token space-joined shingles, one split per row (codegen)")(
+    e => graft.functions.WordShingles(e.head, litInt(e(1), "w")))
 
-  val ngramClip: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("ngram_clip"),
-    info("ngram_clip",
-      "_FUNC_(cand, ref, n) - clipped word-n-gram overlap of two token arrays (codegen)"),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 3, "ngram_clip takes exactly 3 arguments")
-      graft.functions.NgramClip(exprs.head, exprs(1), litInt(exprs(2), "n"))
-    })
+  val ngramClip: Fn = native("ngram_clip", 3,
+    "_FUNC_(cand, ref, n) - clipped word-n-gram overlap of two token arrays (codegen)")(
+    e => graft.functions.NgramClip(e.head, e(1), litInt(e(2), "n")))
 
-  val charBigramClip: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("char_bigram_clip"),
-    info("char_bigram_clip",
-      "_FUNC_(cand, ref) - clipped character-bigram overlap (the chrF kernel, codegen)"),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2, "char_bigram_clip takes exactly 2 arguments")
-      graft.functions.CharBigramClip(exprs.head, exprs(1))
-    })
+  val charBigramClip: Fn = native("char_bigram_clip", 2,
+    "_FUNC_(cand, ref) - clipped character-bigram overlap (the chrF kernel, codegen)")(
+    e => graft.functions.CharBigramClip(e.head, e(1)))
 
-  val hilbertIndex: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("hilbert_index"),
-    info("hilbert_index",
-      "_FUNC_(x, y, bits) - 2-D Hilbert curve index for layout clustering (codegen)"),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 3, "hilbert_index takes exactly 3 arguments")
-      graft.functions.HilbertIndex(exprs.head, exprs(1), litInt(exprs(2), "bits"))
-    })
+  val hilbertIndex: Fn = native("hilbert_index", 3,
+    "_FUNC_(x, y, bits) - 2-D Hilbert curve index for layout clustering (codegen)")(
+    e => graft.functions.HilbertIndex(e.head, e(1), litInt(e(2), "bits")))
 
-  val lcsLength: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("lcs_length"),
-    info("lcs_length",
-      "_FUNC_(cand, ref) - longest-common-subsequence length of two token arrays (the ROUGE-L kernel, codegen)"),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2, "lcs_length takes exactly 2 arguments")
-      graft.functions.LcsLength(exprs.head, exprs(1))
-    })
+  val lcsLength: Fn = native("lcs_length", 2,
+    "_FUNC_(cand, ref) - longest-common-subsequence length of two token arrays (the ROUGE-L kernel, codegen)")(
+    e => graft.functions.LcsLength(e.head, e(1)))
 
-  val tokenEditDistance: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("token_edit_distance"),
-    info("token_edit_distance",
-      "_FUNC_(cand, ref) - token-level Levenshtein distance of two token arrays (the WER kernel, codegen)"),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2, "token_edit_distance takes exactly 2 arguments")
-      graft.functions.TokenEditDistance(exprs.head, exprs(1))
-    })
+  val tokenEditDistance: Fn = native("token_edit_distance", 2,
+    "_FUNC_(cand, ref) - token-level Levenshtein distance of two token arrays (the WER kernel, codegen)")(
+    e => graft.functions.TokenEditDistance(e.head, e(1)))
 
-  val gopherRepetition: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("gopher_repetition"),
-    info("gopher_repetition",
-      "_FUNC_(text, dupW) - Gopher within-doc repetition stats struct " +
-        "(top-bigram/trigram fraction, duplicated-dupW-gram coverage; codegen)"),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2, "gopher_repetition takes exactly 2 arguments")
-      graft.functions.GopherRepetition(exprs.head, litInt(exprs(1), "dupW"))
-    })
+  val gopherRepetition: Fn = native("gopher_repetition", 2,
+    "_FUNC_(text, dupW) - Gopher within-doc repetition stats struct " +
+      "(top-bigram/trigram fraction, duplicated-dupW-gram coverage; codegen)")(
+    e => graft.functions.GopherRepetition(e.head, litInt(e(1), "dupW")))
 
-  val poissonDrawWeights: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("poisson_draw_weights"),
-    info("poisson_draw_weights",
-      "_FUNC_(key, b) - deterministic per-key Poisson(1) bootstrap draw counts for b resamples (codegen)"),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2, "poisson_draw_weights takes exactly 2 arguments")
-      graft.functions.PoissonDrawWeights(exprs.head, litInt(exprs(1), "b"))
-    })
+  val poissonDrawWeights: Fn = native("poisson_draw_weights", 2,
+    "_FUNC_(key, b) - deterministic per-key Poisson(1) bootstrap draw counts for b resamples (codegen)")(
+    e => graft.functions.PoissonDrawWeights(e.head, litInt(e(1), "b")))
 
-  val squaredDistances: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("squared_distances"),
-    info("squared_distances",
-      "_FUNC_(vec, centroids) - squared L2 distance to each row of a " +
-        "FOLDABLE array<array<double>> centroid matrix (codegen)"),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2, "squared_distances takes exactly 2 arguments")
+  val squaredDistances: Fn = native("squared_distances", 2,
+    "_FUNC_(vec, centroids) - squared L2 distance to each row of a " +
+      "FOLDABLE array<array<double>> centroid matrix (codegen)") { exprs =>
       val cents = exprs(1) match {
         case c if c.foldable =>
           // route through a Cast so the natural SQL spelling
@@ -182,7 +130,7 @@ object GraftExtensions {
           "centroids must be a foldable array<array<double>> literal")
       }
       graft.functions.SquaredDistances(exprs.head, cents)
-    })
+    }
 
   /** KMV bottom-k distinct-count sketch as a SQL AGGREGATE — the
     * analyzer wraps a bare AggregateFunction from a registry builder in
@@ -191,26 +139,20 @@ object GraftExtensions {
     * contract — pair with the engine's md5-derived hash, e.g.
     * `CAST(conv(substring(md5(...), 1, 8), 16, 10) AS BIGINT)`, to
     * reproduce `KmvDistinct.onMd5` exactly). */
-  val kmvDistinct: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("kmv_distinct"),
-    info("kmv_distinct",
-      "_FUNC_(hash64, k) - approximate distinct count via the bottom-k (KMV) sketch over a pre-hashed LONG; mergeable, k longs of state per group"),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2, "kmv_distinct takes exactly 2 arguments")
-      graft.functions.KmvDistinct(exprs.head, litInt(exprs(1), "k"))
-    })
+  val kmvDistinct: Fn = native("kmv_distinct", 2,
+    "_FUNC_(hash64, k) - approximate distinct count via the bottom-k (KMV) sketch over a pre-hashed LONG; mergeable, k longs of state per group")(
+    e => graft.functions.KmvDistinct(e.head, litInt(e(1), "k")))
 
   /** Scalar training-data functions exposed to SQL: each is a composition
     * of built-in (codegen'd) expressions, registered by wrapping the
     * Column-level operator — `SELECT lang_id(text) FROM docs` works for
     * pure-SQL users with no DataFrame code. */
-  private def composite(name: String, usage: String)(fn: Seq[Column] => Column)
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+  private def composite(name: String, usage: String)(fn: Seq[Column] => Column): Fn =
     (FunctionIdentifier(name), info(name, usage),
       (exprs: Seq[Expression]) =>
         ColumnCompat.resolvedExpression(fn(exprs.map(ColumnCompat.column))))
 
-  val composites: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+  val composites: Seq[Fn] = Seq(
     composite("lang_id", "_FUNC_(text) - stopword-profile language guess") {
       case Seq(t) => graft.ops.TextAnalysis.langId(t)
     },

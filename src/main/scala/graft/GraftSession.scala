@@ -76,10 +76,11 @@ object GraftSession {
     * under exactly the bench configuration, so result-identity of these
     * settings is certified, not assumed. Both are scale-adaptive /
     * scale-inert (OPTIMIZATION_r15.md §global):
-    *  - scan fan-out (see [[graft.ops.Tables.fanned]]): repartitions a
-    *    fact table only while its files underfill the cluster; identity
-    *    at scale. `SPARK_GRAFT_FANOUT=false` turns it off, for an oracle
-    *    pass without fan-out.
+    *  - scan fan-out (see [[graft.ops.ScanFanOut]]): repartitions a
+    *    small fact-table scan where the work before its first shuffle
+    *    pays for the exchange; identity at scale.
+    *    `SPARK_GRAFT_FANOUT=false` turns it off, for an oracle pass
+    *    without fan-out.
     *  - AQE coalesce floor: AQE's byte-targeted coalescing treats
     *    partition BYTES as the whole cost model, so a CPU-heavy stage
     *    over a small shuffle (posting-list pair expansion, resample

@@ -38,10 +38,12 @@ object PlanAudit {
     * truncate at a char budget, and WHERE the "..." cut lands depends on
     * expression-id digit counts — which vary with session history.
     * Untruncated text + id-stripping is deterministic; truncated text is
-    * not. */
+    * not. Scan fan-out is on, as under the bench confs, so every plan
+    * hash records the fan-out rule's decisions. */
   val FingerprintConf: Map[String, String] = Map(
     "spark.sql.shuffle.partitions" -> "32",
-    "spark.sql.maxMetadataStringLength" -> "100000")
+    "spark.sql.maxMetadataStringLength" -> "100000",
+    "spark.graft.scan.fanout" -> "true")
 
   /** Normalized physical-plan text: expression ids (`#123`), plan ids,
     * and object addresses stripped — everything else (operator tree,

@@ -351,20 +351,18 @@ object Stats {
     // a digest per 4-draw block plus a parse chain per draw through two
     // explode fan-outs; 2.5 → 1.3 s at sf0.1).
     // ONE scan serves the replicate pass and the point estimate: the
-    // two branches used to prune different columns below the (fanned)
-    // exchange, splitting it into two exchanges and re-running the
-    // serial single-file scan twice (822 ms of the query's warm time
-    // at sf0.1 was the duplicate scan+exchange). The checkpoint
-    // materializes the shared projection once; both aggregates read
-    // its blocks at the fan-out's parallel width.
+    // two branches used to prune different columns below the scan,
+    // re-running the serial single-file scan twice (822 ms of the
+    // query's warm time at sf0.1 was the duplicate scan+exchange). The
+    // checkpoint materializes the shared projection once, draws
+    // included, so the draw kernel runs in the read's own plan (where
+    // the scan fan-out rule spreads it); both aggregates read its blocks.
     val base = df
-      .select(col(groupCol).as("grp"), x.as("x"), rowKey.cast("string").as("rk"))
+      .select(col(groupCol).as("grp"), x.as("x"),
+        graft.functions.PoissonDrawWeights(rowKey.cast("string"), b).as("ws"))
       .localCheckpoint()
     val reps = base
-      .select(col("grp"), col("x"),
-        graft.functions.PoissonDrawWeights(col("rk"), b).as("ws"))
-      .select(col("grp"), col("x"),
-        posexplode(col("ws")).as(Seq("i", "w")))
+      .select(col("grp"), col("x"), posexplode(col("ws")).as(Seq("i", "w")))
       .groupBy(col("grp"), col("i"))
       .agg(sum(col("w").cast("long") * col("x")).as("swx"),
         sum(col("w").cast("long")).as("sw"))

@@ -8,104 +8,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Spark-native parquet reads: column pruning and predicate pushdown reach
   * the scan for free. At 100 TB these would be partitioned/bucketed tables
   * behind a catalog; the loader is the single seam where that swap happens.
+  * It is also where the session gets the scan fan-out rule
+  * ([[ScanFanOut]]), which decides per plan whether a small fact-table
+  * scan is repartitioned; queries read plainly.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    ScanFanOut.install(spark)
     spark.read.parquet(s"$dir/$name.parquet")
-
-  /** The fact tables' stable ids — the deterministic hash fan-out keys. */
-  private val FanOutKeys = Map(
-    "lineitem" -> "l_orderkey", "orders" -> "o_orderkey",
-    "customer" -> "c_custkey", "documents" -> "doc_id",
-    "embeddings" -> "vec_id", "events" -> "event_id")
-
-  /** Scale-adaptive scan fan-out (guide §2.5 "input skew": one huge
-    * unsplittable file → repartition immediately after the read).
-    *
-    * A parquet scan charges each file openCostInBytes (4 MiB) when
-    * packing splits, and a file never splits below a row group — so when
-    * a fact table's bytes are under slots × 4 MiB the scan runs on a
-    * handful of tasks and a CPU-heavy per-row kernel directly above it
-    * (shingling, char/gram explodes, image decode, DP kernels, wide
-    * aggregation buffers) is single-core while the other slots idle:
-    * measured 1.1–2.5 s single-task stages at sf0.1 on local[32]
-    * (OPTIMIZATION_r15.md). Above the threshold the scan fills the
-    * cluster by itself and this helper is the IDENTITY — at 100 TB no
-    * shuffle of table bytes is ever introduced; locally it moves
-    * < slots × 4 MiB once.
-    *
-    * OPT-IN per query builder, not applied at the loader seam: measured
-    * per query, the exchange only pays where the heavy kernel sits
-    * directly above the scan with no intervening shuffle. Queries that
-    * re-scan the table several times (layout_prune_sim: 3.0 → 5.2 s) or
-    * whose first operation is a different-key shuffle anyway
-    * (join_interval: 2.4 → 3.7 s) LOSE from a blanket fan-out.
-    *
-    * Hash-partition on the table's stable id (deterministic under retry,
-    * unlike round-robin; no sort-before-repartition cost), so results
-    * are bit-identical — the oracle gate runs with the same conf ON.
-    * Gated on `spark.graft.scan.fanout` (set by the timed entry points
-    * and Verify; default off so plan-shape specs keep asserting the
-    * at-scale shapes, which fan-out preserves by construction). */
-  def fanned(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = name match {
-      case "events" => events(spark, dir)
-      case _ => table(spark, dir, name)
-    }
-    if (fanOutActive(spark, dir, name))
-      df.repartition(fanWidth(spark, dir, name), df(FanOutKeys(name)))
-    else df
   }
-
-  /** Fan-out is inert above this table size: past it the scan fills the
-    * cluster by itself (≥ 32 scan tasks at the default 4 MiB
-    * openCostInBytes charge). A parallelism-INDEPENDENT constant, so the
-    * oracle gate (Verify) takes the same per-table fan-out decision as the
-    * timed bench at any core count — r15 ADVICE: the old `slots × 4 MiB`
-    * gate silently disagreed between the two. */
-  private val FanOutMaxBytes = 128L * 1024 * 1024
-
-  /** Bytes per fan-out task (compressed parquet). Derives the fan-out
-    * WIDTH from the data instead of always using every slot: at 32
-    * slots a 0.6 MB table fanned 32 ways is ~19 KB/task and scheduling
-    * overhead beats the parallelism (r15 driver scaling block: 17/44
-    * queries ≥10% FASTER at 8 cores). 64 KiB of parquet ≈ a few
-    * hundred KB raw — enough work per task for the CPU-heavy kernels
-    * fan-out exists for, measured indistinguishable from full-width on
-    * the r15 winner set at 32 cores (OPTIMIZATION_r16.md) while
-    * capping task explosion. */
-  private val FanOutTaskBytes = 64L * 1024
-
-  /** Data-proportional fan-out width: fills cores proportionally to the
-    * table's bytes, converges to `defaultParallelism` as data grows. */
-  private def fanWidth(spark: SparkSession, dir: String, name: String): Int = {
-    val w = (tableBytes(dir, name) + FanOutTaskBytes - 1) / FanOutTaskBytes
-    math.min(spark.sparkContext.defaultParallelism.toLong,
-      math.max(2L, w)).toInt
-  }
-
-  /** On-disk size of a table: a single parquet file's size, or the sum
-    * of the part files for a standard multi-file parquet directory
-    * (r15 ADVICE: Files.size on a directory returns the directory-entry
-    * size, which would have made fan-out permanently active at scale).
-    * Unreadable path → Long.MaxValue → no fan-out. */
-  private def tableBytes(dir: String, name: String): Long =
-    try {
-      val p = java.nio.file.Paths.get(dir, s"$name.parquet")
-      if (java.nio.file.Files.isDirectory(p)) {
-        import scala.jdk.CollectionConverters._
-        val s = java.nio.file.Files.list(p)
-        try s.iterator().asScala
-          .filter(java.nio.file.Files.isRegularFile(_))
-          .map(java.nio.file.Files.size).sum
-        finally s.close()
-      } else java.nio.file.Files.size(p)
-    } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
-
-  /** True exactly when [[fanned]] repartitions. */
-  private def fanOutActive(spark: SparkSession, dir: String, name: String): Boolean =
-    spark.conf.getOption("spark.graft.scan.fanout").contains("true") &&
-      tableBytes(dir, name) < FanOutMaxBytes
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "orders")

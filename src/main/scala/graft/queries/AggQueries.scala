@@ -43,7 +43,7 @@ object AggQueries extends QueryPack {
 
     // hierarchical rollup (nation would be the real axis; flags stand in).
     "agg_rollup" -> { (s, dir) =>
-      Tables.fanned(s, dir, "lineitem")
+      Tables.lineitem(s, dir)
         .rollup(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("n"), sum(dec("l_extendedprice")).cast("double").as("sum_price"))
     },
@@ -92,7 +92,7 @@ object AggQueries extends QueryPack {
     // — two separate calls would build and serialize that buffer twice
     // (measured ~1.9x slower at sf0.1).
     "agg_percentile" -> { (s, dir) =>
-      Tables.fanned(s, dir, "lineitem").groupBy(col("l_returnflag"))
+      Tables.lineitem(s, dir).groupBy(col("l_returnflag"))
         .agg(expr("percentile(l_extendedprice, array(0.5D, 0.9D))").as("ps"))
         .select(col("l_returnflag"),
           round(element_at(col("ps"), 1), 4).as("p50"),
@@ -108,7 +108,7 @@ object AggQueries extends QueryPack {
     "agg_median_exact" -> { (s, dir) =>
       val cents = (col("l_extendedprice").cast("decimal(18,2)") * 100)
         .cast("long")
-      val grp = Tables.fanned(s, dir, "lineitem")
+      val grp = Tables.lineitem(s, dir)
         .select(col("l_returnflag").as("g"), cents.as("x"))
         .groupBy(col("g"), col("x")).agg(count(lit(1)).as("c"))
       val wOrd = org.apache.spark.sql.expressions.Window
@@ -304,9 +304,6 @@ object AggQueries extends QueryPack {
     // the day-merged sketch equals the direct sketch's estimates.
     "agg_cms_rollup" -> { (s, dir) =>
       import graft.ops.Sketches
-      // NOT fanned (measured r16: 1.12 -> 1.42 s with fan-out — ev has
-      // two sketch consumers, each paying the exchange, and the md5
-      // partial agg over events is too small to amortize it)
       val ev = Tables.events(s, dir)
         .select(to_date(col("ts")).as("day"), col("user_id"))
       val dailySketch = ev
@@ -361,11 +358,9 @@ object AggQueries extends QueryPack {
     // hitter is pruned, and est ≥ exact on every output row.
     "agg_cms_hh" -> { (s, dir) =>
       import graft.ops.Sketches
-      // fanned: the md5×4 CMS partial agg over the token explode ran as
-      // ONE task above the unfanned scan (823 ms stage, graft.Profile
-      // r16); total derived from the exact counts (Σ exact == count of
-      // all tokens) instead of a third explode pass over the corpus.
-      val toks = Tables.fanned(s, dir, "documents")
+      // total derived from the exact counts (Σ exact == count of all
+      // tokens) instead of a third explode pass over the corpus.
+      val toks = Tables.documents(s, dir)
         .select(explode(split(col("text"), " ")).as("item"))
       val sketch = Sketches.cmsSketch(toks, col("item"))
       val exact = toks.groupBy("item").agg(count(lit(1)).as("exact"))
@@ -422,10 +417,8 @@ object AggQueries extends QueryPack {
     // count sits alongside so the one-sided bound is visible.
     "agg_cms_joinsize" -> { (s, dir) =>
       import graft.ops.Sketches
-      // fanned: each md5×4 CMS partial agg otherwise runs single-task
-      // above its underfilled scan (same shape as agg_cms_hh)
-      val o = Sketches.cmsSketch(Tables.fanned(s, dir, "orders"), col("o_custkey"))
-      val c = Sketches.cmsSketch(Tables.fanned(s, dir, "customer"), col("c_custkey"))
+      val o = Sketches.cmsSketch(Tables.orders(s, dir), col("o_custkey"))
+      val c = Sketches.cmsSketch(Tables.customer(s, dir), col("c_custkey"))
       val exact = Tables.orders(s, dir)
         .join(Tables.customer(s, dir),
           col("o_custkey") === col("c_custkey"))

@@ -171,7 +171,7 @@ object EventQueries extends QueryPack {
     "stat_permutation" -> { (s, dir) =>
       val b = 40
       val cents = (col("value").cast("decimal(18,2)") * 100).cast("long")
-      val base = Tables.fanned(s, dir, "events").select(col("event_type"),
+      val base = Tables.events(s, dir).select(col("event_type"),
         pmod(col("user_id"), lit(2)).as("variant"), cents.as("x"),
         col("event_id"))
       val obs = base.groupBy(col("event_type")).agg(
@@ -1319,7 +1319,7 @@ object EventQueries extends QueryPack {
     // global resample); draws are md5-deterministic per (row key,
     // replicate), so any engine reproduces the band bit for bit.
     "stat_bootstrap" -> { (s, dir) =>
-      graft.ops.Stats.poissonBootstrapCI(Tables.fanned(s, dir, "events"),
+      graft.ops.Stats.poissonBootstrapCI(Tables.events(s, dir),
         "event_type", "value", col("event_id"), b = 40)
     },
 
@@ -1700,7 +1700,7 @@ object EventQueries extends QueryPack {
     // support, confidence, and lift — "users who do A also do B", the
     // co-occurrence signal behind cross-sell and feature-bundling
     // decisions. ONE shuffle on user_id builds sorted distinct-type
-    // baskets; pairs expand MAP-SIDE from each basket (fan-out bounded
+    // baskets; pairs expand MAP-SIDE from each basket (expansion bounded
     // by |event types|², never a self-join of the user×type table);
     // singles and the user count broadcast back onto the tiny pair
     // table. Lift = supp(ab)·N / (supp(a)·supp(b)) stays exact integer
@@ -1742,7 +1742,7 @@ object EventQueries extends QueryPack {
     // health number. The rolling distinct needs no window machinery:
     // each (user, day) activity projects onto the 7 report days it
     // keeps the user "weekly active" for (a bounded ×7 map-side
-    // fan-out), then ONE distinct + count per day. Exact integers
+    // expansion), then ONE distinct + count per day. Exact integers
     // until the rounded ratio.
     "ev_dau_wau" -> { (s, dir) =>
       val ud = Tables.events(s, dir)

@@ -840,7 +840,7 @@ object InferenceQueries extends QueryPack {
     // (source, doc, word) agg; the top-20 rank prunes map-side
     // (WindowGroupLimit).
     "text_burstiness" -> { (s, dir) =>
-      val docs = Tables.fanned(s, dir, "documents")
+      val docs = Tables.documents(s, dir)
       val nd = docs.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
       val perDoc = docs
         .select(col("source"), col("doc_id"),
@@ -915,7 +915,7 @@ object InferenceQueries extends QueryPack {
     // running volume crosses the threshold, the crossing rank is exact
     // integer arithmetic.
     "text_ngram_coverage" -> { (s, dir) =>
-      val grams = Tables.fanned(s, dir, "documents")
+      val grams = Tables.documents(s, dir)
         .where(size(split(col("text"), " ")) >= 3)
         .select(explode(expr(
           "transform(sequence(1, size(split(text, ' ')) - 2)," +
@@ -988,7 +988,7 @@ object InferenceQueries extends QueryPack {
       val scc = least(greatest(sc, lit(0.0001)), lit(0.9999))
       val y = (col("lang") === "en")
       val term = -(when(y, log(scc)).otherwise(log(lit(1.0) - scc)))
-      Tables.fanned(s, dir, "documents")
+      Tables.documents(s, dir)
         .select(round(term * lit(1.0e9), 0).cast("long").as("q"))
         .agg(count(lit(1)).as("n_docs"), sum(d38(col("q"))).as("sq"))
         .select(col("n_docs"),

@@ -26,9 +26,9 @@ object JoinQueries extends QueryPack {
     // cast (order-independent sums).
     "q3_shipping" -> { (s, dir) =>
       val c = Tables.customer(s, dir).where(col("c_mktsegment") === "BUILDING")
-      val o = Tables.fanned(s, dir, "orders")
+      val o = Tables.orders(s, dir)
         .where(col("o_orderdate") < lit("1998-06-15").cast("timestamp"))
-      val l = Tables.fanned(s, dir, "lineitem")
+      val l = Tables.lineitem(s, dir)
         .where(col("l_shipdate") > lit("1998-06-15").cast("timestamp"))
       broadcast(c).join(o, c("c_custkey") === o("o_custkey"))
         .join(l, o("o_orderkey") === l("l_orderkey"))
@@ -118,8 +118,8 @@ object JoinQueries extends QueryPack {
     // formulation goes quadratic). Supplier names broadcast; top-20 via
     // TakeOrderedAndProject.
     "q21_waiting" -> { (s, dir) =>
-      val li = Tables.fanned(s, dir, "lineitem")
-      val o = Tables.fanned(s, dir, "orders")
+      val li = Tables.lineitem(s, dir)
+      val o = Tables.orders(s, dir)
       val late = col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS")
       // two PLAIN hash-aggs instead of multi-countDistinct: Spark plans
       // several distinct aggregates via Expand (3× the joined rows
@@ -205,8 +205,8 @@ object JoinQueries extends QueryPack {
     // order — caught as a last-ulp mismatch at sf0.1 (invisible at
     // sf0.01). Decimal sums are exact and order-independent.
     "join_inner" -> { (s, dir) =>
-      val o = Tables.fanned(s, dir, "orders")
-      val l = Tables.fanned(s, dir, "lineitem")
+      val o = Tables.orders(s, dir)
+      val l = Tables.lineitem(s, dir)
       o.join(l, o("o_orderkey") === l("l_orderkey"))
         .groupBy(col("o_orderkey"))
         .agg(count(lit(1)).as("n_lines"),
@@ -216,7 +216,7 @@ object JoinQueries extends QueryPack {
 
     // broadcast dim chain: lineitem ⋈ supplier ⋈ nation ⋈ region.
     "join_broadcast" -> { (s, dir) =>
-      val l = Tables.fanned(s, dir, "lineitem")
+      val l = Tables.lineitem(s, dir)
       val sup = Tables.supplier(s, dir)
       val n = Tables.nation(s, dir)
       val r = Tables.region(s, dir)

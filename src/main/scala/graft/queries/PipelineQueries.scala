@@ -37,7 +37,7 @@ object PipelineQueries extends QueryPack {
           (col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"))
     },
 
-    // M1 flat-map: 1→N fan-out (explode stays inside codegen).
+    // M1 flat-map: 1→N expansion (explode stays inside codegen).
     "m1_flatmap" -> { (s, dir) =>
       Tables.documents(s, dir)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))

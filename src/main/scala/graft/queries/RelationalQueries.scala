@@ -20,7 +20,7 @@ object RelationalQueries extends QueryPack {
     // Partial (map-side) aggregation + final hash agg — scales linearly;
     // the groupBy key cardinality is tiny so the shuffle is negligible.
     "q1_agg" -> { (s, dir) =>
-      Tables.fanned(s, dir, "lineitem")
+      Tables.lineitem(s, dir)
         .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -41,7 +41,7 @@ object RelationalQueries extends QueryPack {
     // data-quality profiling with the portable KMV distinct estimate —
     // engine-exact, so even the approximation hash-matches the oracle.
     "profile_lineitem" -> { (s, dir) =>
-      graft.ops.Relational.profile(Tables.fanned(s, dir, "lineitem"), ProfileCols)
+      graft.ops.Relational.profile(Tables.lineitem(s, dir), ProfileCols)
     },
 
     // the corpus- and event-table siblings of profile_lineitem — the
@@ -169,7 +169,7 @@ object RelationalQueries extends QueryPack {
       // the VERDICT-#5 A/B finally run): each row posexplodes into its
       // three (slot, key) legs and ONE (slot, bucket) hash-agg replaces
       // the three per-candidate passes. Interleaved 4-way A/B at sf0.1:
-      // the r15/r16 fan+checkpoint branch was itself the regression
+      // the r15/r16 repartition+checkpoint branch was itself the regression
       // (3-pass checkpointed 2.0–2.4 s vs 0.84 s for the same 3 passes
       // straight off column-pruned scans), and the single pass lands at
       // 0.93–1.01 s while halving the scan count — 2 narrow scans

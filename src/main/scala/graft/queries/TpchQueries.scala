@@ -45,10 +45,10 @@ object TpchQueries extends QueryPack {
     // date-pruned BEFORE the join, and no lineitem column survives, so
     // the semi join never rejoins or dedups the fact table.
     "q4_priority" -> { (s, dir) =>
-      val o = Tables.fanned(s, dir, "orders")
+      val o = Tables.orders(s, dir)
         .where(col("o_orderdate") >= lit("1997-01-01").cast("timestamp") &&
           col("o_orderdate") < lit("1997-04-01").cast("timestamp"))
-      val l = Tables.fanned(s, dir, "lineitem")
+      val l = Tables.lineitem(s, dir)
       o.join(l, o("o_orderkey") === l("l_orderkey") &&
           l("l_shipdate") > o("o_orderdate") + expr("INTERVAL 60 DAYS"),
           "left_semi")

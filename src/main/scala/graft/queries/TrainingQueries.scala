@@ -44,7 +44,7 @@ object TrainingQueries extends QueryPack {
   private def cachedSpanEdges(s: org.apache.spark.sql.SparkSession,
                               dir: String): org.apache.spark.sql.DataFrame =
     graft.ops.Sidecar.cached(s, s"spanEdges:$dir") {
-      graft.ops.GraphOps.spanEdges(Tables.fanned(s, dir, "documents"), "doc_id", "text")
+      graft.ops.GraphOps.spanEdges(Tables.documents(s, dir), "doc_id", "text")
     }
 
   /** Near-dup cluster map (doc_id, cluster_id) — the policy layer's
@@ -52,14 +52,14 @@ object TrainingQueries extends QueryPack {
   private def cachedDupClusters(s: org.apache.spark.sql.SparkSession,
                                 dir: String): org.apache.spark.sql.DataFrame =
     graft.ops.Sidecar.cached(s, s"dupClusters:$dir") {
-      Dedup.dupClusters(Tables.fanned(s, dir, "documents"), "doc_id", "text")
+      Dedup.dupClusters(Tables.documents(s, dir), "doc_id", "text")
     }
 
   /** Containment digraph pair table at the 0.8 bar (graph_hits). */
   private def cachedContainPairs(s: org.apache.spark.sql.SparkSession,
                                  dir: String): org.apache.spark.sql.DataFrame =
     graft.ops.Sidecar.cached(s, s"containPairs:$dir") {
-      Dedup.containmentPairs(Tables.fanned(s, dir, "documents"), "doc_id", "text",
+      Dedup.containmentPairs(Tables.documents(s, dir), "doc_id", "text",
         threshold = 0.8)
     }
 
@@ -69,7 +69,7 @@ object TrainingQueries extends QueryPack {
   private def cachedVerifiedPairs(s: org.apache.spark.sql.SparkSession,
                                   dir: String): org.apache.spark.sql.DataFrame =
     graft.ops.Sidecar.cached(s, s"verifiedPairs:$dir") {
-      Dedup.lshVerifiedPairs(Tables.fanned(s, dir, "documents"), "doc_id", "text",
+      Dedup.lshVerifiedPairs(Tables.documents(s, dir), "doc_id", "text",
         threshold = 0.1)
     }
 
@@ -88,7 +88,7 @@ object TrainingQueries extends QueryPack {
   private def cachedGram(s: org.apache.spark.sql.SparkSession,
                          dir: String): org.apache.spark.sql.DataFrame =
     graft.ops.Sidecar.cached(s, s"gram:$dir") {
-      Similarity.gramFixedPoint(Tables.fanned(s, dir, "embeddings"), "embedding",
+      Similarity.gramFixedPoint(Tables.embeddings(s, dir), "embedding",
         dim = 64)
     }
 
@@ -96,7 +96,7 @@ object TrainingQueries extends QueryPack {
   private def cachedLmScores(s: org.apache.spark.sql.SparkSession,
                              dir: String): org.apache.spark.sql.DataFrame =
     graft.ops.Sidecar.cached(s, s"lmScores:$dir") {
-      TextAnalysis.interpolatedBigramLogProb(Tables.fanned(s, dir, "documents"),
+      TextAnalysis.interpolatedBigramLogProb(Tables.documents(s, dir),
         "doc_id", "text")
     }
 
@@ -124,14 +124,14 @@ object TrainingQueries extends QueryPack {
 
     // ---- text analysis -------------------------------------------------
     "text_langid" -> { (s, dir) =>
-      Tables.fanned(s, dir, "documents")
+      Tables.documents(s, dir)
         .select(col("doc_id"), TextAnalysis.langId(col("text")).as("lang_guess"))
     },
 
     // language-ID confusion matrix vs the labeled lang column — the
     // quality readout of the identifier itself. One scan, |langs|² agg.
     "eval_langid" -> { (s, dir) =>
-      Tables.fanned(s, dir, "documents")
+      Tables.documents(s, dir)
         .groupBy(col("lang"), TextAnalysis.langId(col("text")).as("lang_guess"))
         .agg(count(lit(1)).as("n"))
     },
@@ -161,7 +161,7 @@ object TrainingQueries extends QueryPack {
     // in chars.
     "text_entropy" -> { (s, dir) =>
       val d38 = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
-      val docs = Tables.fanned(s, dir, "documents")
+      val docs = Tables.documents(s, dir)
       // Structural domain clamp (r12 verdict): the charset²-bound is an
       // ASSUMPTION about the input — a source shipping binary garbage
       // has an unbounded gram domain and this was the registry's
@@ -249,20 +249,20 @@ object TrainingQueries extends QueryPack {
     },
 
     "text_rollhash" -> { (s, dir) =>
-      Tables.fanned(s, dir, "documents").select(
+      Tables.documents(s, dir).select(
         col("doc_id"),
         TextAnalysis.rollingHash(col("text")).as("rh"),
         TextAnalysis.repetitionScore(col("text")).as("rep"))
     },
 
     "text_bigram_lm" -> { (s, dir) =>
-      TextAnalysis.bigramLogProb(Tables.fanned(s, dir, "documents"), "doc_id", "text")
+      TextAnalysis.bigramLogProb(Tables.documents(s, dir), "doc_id", "text")
     },
 
     // interpolated CONDITIONAL bigram LM (KenLM-style backoff shape):
     // p(w2|w1) backed off to the unigram distribution, fixed λ.
     "text_lm_interp" -> { (s, dir) =>
-      TextAnalysis.interpolatedBigramLogProb(Tables.fanned(s, dir, "documents"),
+      TextAnalysis.interpolatedBigramLogProb(Tables.documents(s, dir),
         "doc_id", "text")
     },
 
@@ -301,13 +301,13 @@ object TrainingQueries extends QueryPack {
 
     // Kneser-Ney smoothing: absolute discount + continuation backoff.
     "text_lm_kn" -> { (s, dir) =>
-      TextAnalysis.knBigramLogProb(Tables.fanned(s, dir, "documents"), "doc_id", "text")
+      TextAnalysis.knBigramLogProb(Tables.documents(s, dir), "doc_id", "text")
     },
 
     // top-3 TF-IDF keywords per doc (rounded score ranks identically in
     // any engine; ties break on the word).
     "text_tfidf" -> { (s, dir) =>
-      TextAnalysis.tfIdfTopK(Tables.fanned(s, dir, "documents"), "doc_id", "text", k = 3)
+      TextAnalysis.tfIdfTopK(Tables.documents(s, dir), "doc_id", "text", k = 3)
     },
 
     // BM25 relevance of every doc against a fixed query — the retrieval
@@ -319,27 +319,27 @@ object TrainingQueries extends QueryPack {
     // verbatim w-token spans shared across docs — substring-level dup
     // (boilerplate/quotation) detection that document-level scores dilute.
     "dedup_spans" -> { (s, dir) =>
-      Dedup.dupSpans(Tables.fanned(s, dir, "documents"), "doc_id", "text", w = 15)
+      Dedup.dupSpans(Tables.documents(s, dir), "doc_id", "text", w = 15)
     },
 
     // doc-level duplicate-token fraction over the shared spans — the
     // curation filter built on dedup_spans.
     "dedup_dupfrac" -> { (s, dir) =>
       Dedup.dupFractionOf(cachedSpanCoverage(s, dir),
-        Tables.fanned(s, dir, "documents"), "doc_id", "text")
+        Tables.documents(s, dir), "doc_id", "text")
     },
 
     // the REMOVAL half: excise every token covered by a cross-doc
     // duplicated span, rebuilding the cleaned text.
     "dedup_span_removal" -> { (s, dir) =>
       Dedup.removeSharedSpansOf(cachedSpanCoverage(s, dir),
-        Tables.fanned(s, dir, "documents"), "doc_id", "text")
+        Tables.documents(s, dir), "doc_id", "text")
     },
 
     // WITHIN-doc repetition removal (row-local): non-first occurrences
     // of repeated trigrams lose their exclusive token coverage.
     "text_derep" -> { (s, dir) =>
-      TextAnalysis.dedupInline(Tables.fanned(s, dir, "documents"), "doc_id", "text", w = 3)
+      TextAnalysis.dedupInline(Tables.documents(s, dir), "doc_id", "text", w = 3)
     },
 
     // LLM-watermark scan: green-pair fraction z-score per doc — the
@@ -347,7 +347,7 @@ object TrainingQueries extends QueryPack {
     // enters training. Natural text sits near z=0; a green-list
     // sampler's output clears the z≥4 flag by construction.
     "text_watermark" -> { (s, dir) =>
-      TextAnalysis.watermarkScore(Tables.fanned(s, dir, "documents"), "doc_id", "text")
+      TextAnalysis.watermarkScore(Tables.documents(s, dir), "doc_id", "text")
     },
 
     // CROSS-doc boilerplate removal (the CCNet line-dedup stage):
@@ -356,7 +356,7 @@ object TrainingQueries extends QueryPack {
     // The frequent set collapses to one broadcast array; the data
     // itself never shuffles.
     "text_boilerplate" -> { (s, dir) =>
-      TextAnalysis.removeFrequentSegments(Tables.fanned(s, dir, "documents"),
+      TextAnalysis.removeFrequentSegments(Tables.documents(s, dir),
         "doc_id", "text", segTokens = 8, minDocs = 2)
     },
 
@@ -392,7 +392,7 @@ object TrainingQueries extends QueryPack {
       // materializing concat'd bigram strings per row
       val bigrams = transform(idxs, i =>
         xxhash64(element_at(t, i + 1), element_at(t, i + 2)))
-      Tables.fanned(s, dir, "documents")
+      Tables.documents(s, dir)
         .select(col("doc_id"), split(col("text"), " ").as("t"))
         .select(col("doc_id"),
           greatest(nTok - 1, lit(0)).cast("long").as("n_bigrams"),
@@ -436,20 +436,20 @@ object TrainingQueries extends QueryPack {
     // Gopher-style WITHIN-doc repetition (top-bigram/trigram fraction,
     // duplicated-5gram position coverage) — the boilerplate filter family.
     "text_gopher" -> { (s, dir) =>
-      TextAnalysis.gopherRepetition(Tables.fanned(s, dir, "documents"), "doc_id", "text")
+      TextAnalysis.gopherRepetition(Tables.documents(s, dir), "doc_id", "text")
     },
 
     // the composed curation pass: every scan-shaped quality signal
     // (language ID, token stats, stopword ratio, repetition, learned
     // classifier) plus the keep verdict in ONE zero-shuffle projection —
     // at 100 TB this is the single read that decides a doc's fate, so it
-    // must pipeline with the scan, not fan out into per-signal jobs.
+    // must pipeline with the scan, not split into per-signal jobs.
     "curate_filter" -> { (s, dir) =>
       val t = col("text")
       val nTok = TextAnalysis.tokenCount(t)
       val rep = TextAnalysis.repetitionScore(t)
       val z = TextAnalysis.classifierLogit(t)
-      Tables.fanned(s, dir, "documents").select(
+      Tables.documents(s, dir).select(
         col("doc_id"),
         TextAnalysis.langId(t).as("lang_guess"),
         nTok.as("n_tokens"),
@@ -465,21 +465,21 @@ object TrainingQueries extends QueryPack {
     // winnowing fingerprints (SIGMOD 2003): per-window minimal k-gram
     // hashes, rightmost on ties — substring-granular contamination index.
     "text_winnow" -> { (s, dir) =>
-      TextAnalysis.winnow(Tables.fanned(s, dir, "documents"), "doc_id", "text",
+      TextAnalysis.winnow(Tables.documents(s, dir), "doc_id", "text",
         k = 4, w = 4)
     },
 
     // fastText-style hashed-logistic quality classifier — one scan-shaped
     // projection (hash, weight lookup, ordered fold all inside codegen).
     "text_classify" -> { (s, dir) =>
-      TextAnalysis.classifierScore(Tables.fanned(s, dir, "documents"), "doc_id", "text")
+      TextAnalysis.classifierScore(Tables.documents(s, dir), "doc_id", "text")
     },
 
     // precision/recall of the quality classifier against the lang='en'
     // reference at five cutoffs — the threshold-calibration table. One
     // scan, |thresholds| confusion rows via map-side partial agg.
     "eval_pr_curve" -> { (s, dir) =>
-      TextAnalysis.prCurve(Tables.fanned(s, dir, "documents"), "doc_id", "text",
+      TextAnalysis.prCurve(Tables.documents(s, dir), "doc_id", "text",
         col("lang") === "en", Seq(0.5, 0.52, 0.54, 0.56, 0.58))
     },
 
@@ -488,7 +488,7 @@ object TrainingQueries extends QueryPack {
     // costs in corpus (pr_curve's partner table for picking the
     // operating point).
     "curate_yield_curve" -> { (s, dir) =>
-      TextAnalysis.yieldCurve(Tables.fanned(s, dir, "documents"), "doc_id", "text",
+      TextAnalysis.yieldCurve(Tables.documents(s, dir), "doc_id", "text",
         Seq(0.5, 0.52, 0.54, 0.56, 0.58))
     },
 
@@ -506,7 +506,7 @@ object TrainingQueries extends QueryPack {
     // the distinct-score table (≤10⁴ rows at 4 decimals), never the
     // corpus.
     "eval_auc" -> { (s, dir) =>
-      TextAnalysis.aucScore(Tables.fanned(s, dir, "documents"), "doc_id", "text",
+      TextAnalysis.aucScore(Tables.documents(s, dir), "doc_id", "text",
         col("lang") === "en")
     },
 
@@ -660,7 +660,7 @@ object TrainingQueries extends QueryPack {
     // calibration table: per score decile, exact counts and an exact
     // integer-summed mean score vs the empirical positive rate.
     "eval_calibration" -> { (s, dir) =>
-      TextAnalysis.calibration(Tables.fanned(s, dir, "documents"), "doc_id", "text",
+      TextAnalysis.calibration(Tables.documents(s, dir), "doc_id", "text",
         col("lang") === "en", bins = 10)
     },
 
@@ -672,7 +672,7 @@ object TrainingQueries extends QueryPack {
     // engines add the same doubles in the same sequence (the stat_anova
     // discipline), one division by N at the end.
     "eval_ece" -> { (s, dir) =>
-      val cal = TextAnalysis.calibration(Tables.fanned(s, dir, "documents"),
+      val cal = TextAnalysis.calibration(Tables.documents(s, dir),
         "doc_id", "text", col("lang") === "en", bins = 10)
       cal
         .agg(sort_array(collect_list(struct(col("bin"),
@@ -696,7 +696,7 @@ object TrainingQueries extends QueryPack {
     // eval_ece: per-bin terms from the hash-proven rounded table, folded
     // in bin order; the base rate is one exact-count division.
     "eval_brier" -> { (s, dir) =>
-      val cal = TextAnalysis.calibration(Tables.fanned(s, dir, "documents"),
+      val cal = TextAnalysis.calibration(Tables.documents(s, dir),
         "doc_id", "text", col("lang") === "en", bins = 10)
       val r6 = (c: org.apache.spark.sql.Column) => TimeSeries.portableRound6(c)
       val packed = cal.agg(
@@ -779,7 +779,7 @@ object TrainingQueries extends QueryPack {
     // DSIR-style importance weights toward the src0 target domain: mean
     // bigram log-likelihood ratio (target model vs general model).
     "mix_dsir" -> { (s, dir) =>
-      TextAnalysis.dsirWeights(Tables.fanned(s, dir, "documents"), "doc_id", "text",
+      TextAnalysis.dsirWeights(Tables.documents(s, dir), "doc_id", "text",
         col("source") === "src0")
     },
 
@@ -790,7 +790,7 @@ object TrainingQueries extends QueryPack {
       val aug = concat(substring(col("text"), 1, 40),
         lit(" contact user"), col("doc_id"), lit("@example.com via https://ex.com/d/"),
         col("doc_id"), lit(" or call +1 555-000-"), col("doc_id"), lit(" now"))
-      Tables.fanned(s, dir, "documents").select(col("doc_id"),
+      Tables.documents(s, dir).select(col("doc_id"),
         TextAnalysis.redactPii(aug).as("clean"),
         TextAnalysis.piiHits(aug).as("n_pii"))
     },
@@ -1071,7 +1071,7 @@ object TrainingQueries extends QueryPack {
     },
 
     "dedup_minhash" -> { (s, dir) =>
-      Dedup.minhashLshPairs(Tables.fanned(s, dir, "documents"), "doc_id", "text",
+      Dedup.minhashLshPairs(Tables.documents(s, dir), "doc_id", "text",
         numPerm = 12, rowsPerBand = 3)
     },
 
@@ -1090,7 +1090,7 @@ object TrainingQueries extends QueryPack {
     // Jaccard per LSH candidate — how far the banding geometry is from
     // truth on THIS corpus, certified in-engine.
     "dedup_minhash_calib" -> { (s, dir) =>
-      Dedup.minhashCalibration(Tables.fanned(s, dir, "documents"), "doc_id", "text")
+      Dedup.minhashCalibration(Tables.documents(s, dir), "doc_id", "text")
     },
 
     // text-side threshold sweep (emb_threshold_sweep's twin): one
@@ -1124,7 +1124,7 @@ object TrainingQueries extends QueryPack {
     // registered builder entry (its consumers read the sidecar; this
     // one never does, so the posting-list build cost stays measured).
     "graph_edges" -> { (s, dir) =>
-      graft.ops.GraphOps.spanEdges(Tables.fanned(s, dir, "documents"),
+      graft.ops.GraphOps.spanEdges(Tables.documents(s, dir),
         "doc_id", "text")
     },
 
@@ -1599,7 +1599,7 @@ object TrainingQueries extends QueryPack {
 
     // the production two-stage shape: LSH candidates → exact verify.
     "dedup_lsh_verified" -> { (s, dir) =>
-      Dedup.lshVerifiedPairs(Tables.fanned(s, dir, "documents"), "doc_id", "text",
+      Dedup.lshVerifiedPairs(Tables.documents(s, dir), "doc_id", "text",
         threshold = 0.5)
     },
 
@@ -1607,19 +1607,19 @@ object TrainingQueries extends QueryPack {
     // similarity instead of shingle Jaccard — keeps reordered remixes
     // as distinct documents (see Dedup.lcsVerifiedPairs).
     "dedup_lcs_verified" -> { (s, dir) =>
-      Dedup.lcsVerifiedPairs(Tables.fanned(s, dir, "documents"), "doc_id", "text",
+      Dedup.lcsVerifiedPairs(Tables.documents(s, dir), "doc_id", "text",
         threshold = 0.5)
     },
 
     "dedup_simhash_pairs" -> { (s, dir) =>
-      Dedup.simhashNearDupPairs(Tables.fanned(s, dir, "documents"), "doc_id", "text",
+      Dedup.simhashNearDupPairs(Tables.documents(s, dir), "doc_id", "text",
         maxHamming = 3)
     },
 
     // incremental crawl dedup: docs with id < 250 play the settled
     // corpus; the rest arrive as the new batch and collide against it.
     "dedup_incremental" -> { (s, dir) =>
-      val docs = Tables.fanned(s, dir, "documents")
+      val docs = Tables.documents(s, dir)
       Dedup.incrementalDupPairs(
         docs.where(col("doc_id") < 250), docs.where(col("doc_id") >= 250),
         "doc_id", "text", numPerm = 12, rowsPerBand = 3)
@@ -1628,7 +1628,7 @@ object TrainingQueries extends QueryPack {
     // transitive closure of the near-dup graph: every doc labeled with
     // the smallest doc id it can reach (singletons label themselves).
     "dedup_clusters" -> { (s, dir) =>
-      Dedup.dupClusters(Tables.fanned(s, dir, "documents"), "doc_id", "text")
+      Dedup.dupClusters(Tables.documents(s, dir), "doc_id", "text")
     },
 
     // cluster-size census over the same cluster map: how much of the
@@ -1651,12 +1651,12 @@ object TrainingQueries extends QueryPack {
     },
 
     // the star-edge set feeding connected components, hash-checked
-    // directly: per (band, bucket) the min id fans out to every other
+    // directly: per (band, bucket) the min id links to every other
     // member — LINEAR edge volume per bucket where the pair enumeration
     // is quadratic (the giant-cluster kill-switch at 100 TB).
     "dedup_star_cc" -> { (s, dir) =>
       Dedup.bandedStarEdges(
-        Dedup.minhashSignatureExpr(Tables.fanned(s, dir, "documents"), "doc_id", "text",
+        Dedup.minhashSignatureExpr(Tables.documents(s, dir), "doc_id", "text",
           numPerm = 12, shingleW = 3),
         "doc_id", numPerm = 12, rowsPerBand = 3)
     },
@@ -1748,7 +1748,7 @@ object TrainingQueries extends QueryPack {
     // decontamination policy: per new-crawl doc, the token fraction
     // covered by spans the settled corpus already holds + keep verdict.
     "contam_frac" -> { (s, dir) =>
-      val docs = Tables.fanned(s, dir, "documents")
+      val docs = Tables.documents(s, dir)
       Dedup.contaminationFraction(
         docs.where(col("doc_id") < 250), docs.where(col("doc_id") >= 250),
         "doc_id", "text", w = 15, maxFrac = 0.2)
@@ -1876,7 +1876,7 @@ object TrainingQueries extends QueryPack {
     // Every stage is an operator with its own oracle; this query proves
     // they CHAIN (one plan, no materialization between stages).
     "curate_pipeline" -> { (s, dir) =>
-      val docs = Tables.fanned(s, dir, "documents")
+      val docs = Tables.documents(s, dir)
       val nTok = TextAnalysis.tokenCount(col("text"))
       val mtl = (length(col("text")) - (nTok - 1)).cast("double") / nTok.cast("double")
       val norm = docs.select(col("doc_id"), col("text"),
@@ -1908,7 +1908,7 @@ object TrainingQueries extends QueryPack {
     // tokens (what the training run actually consumes), not whitespace
     // counts — train → encode → prefix-sum shard as one verified chain.
     "shard_bpe" -> { (s, dir) =>
-      val docs = Tables.fanned(s, dir, "documents")
+      val docs = Tables.documents(s, dir)
       val rules = bpeRules(s, dir)
       CorpusOps.shardByBudget(
         Bpe.encodeTokenCounts(docs, "doc_id", "text", rules),
@@ -1928,7 +1928,7 @@ object TrainingQueries extends QueryPack {
     // content-defined chunking: boundaries from local w-gram hashes, so
     // edits only reshift the chunks they touch (the dedup-storage rule).
     "pack_cdc" -> { (s, dir) =>
-      CorpusOps.cdcChunks(Tables.fanned(s, dir, "documents").select("doc_id", "text"),
+      CorpusOps.cdcChunks(Tables.documents(s, dir).select("doc_id", "text"),
         "doc_id", "text", w = 3, modulus = 32)
     },
 
@@ -1942,7 +1942,7 @@ object TrainingQueries extends QueryPack {
       // two consumers (occurrence agg + the join side): cut the chunk
       // lineage so the md5-explode runs once (3.8 → 2.0 s at sf0.1)
       val chunks = CorpusOps.cdcChunks(
-        Tables.fanned(s, dir, "documents").select("doc_id", "source", "text"),
+        Tables.documents(s, dir).select("doc_id", "source", "text"),
         "doc_id", "text", w = 3, modulus = 32).localCheckpoint()
       val occ = chunks.groupBy(col("chunk_hash"))
         .agg(count(lit(1)).as("nocc"))
@@ -2191,7 +2191,7 @@ object TrainingQueries extends QueryPack {
     // cells scanned = higher recall; the sweep shows where the curve
     // saturates). One brute-force pass feeds all four comparisons.
     "sim_nprobe_sweep" -> { (s, dir) =>
-      val emb = Tables.fanned(s, dir, "embeddings")
+      val emb = Tables.embeddings(s, dir)
       val q = emb.where(col("vec_id") < 10)
       val exact = Similarity.bruteForceTopK(emb, q, "vec_id", "embedding",
         k = 5).localCheckpoint()
@@ -2294,7 +2294,7 @@ object TrainingQueries extends QueryPack {
     "emb_cka" -> { (s, dir) =>
       val dec = org.apache.spark.sql.types.DecimalType(38, 0)
       val scale = 1048576.0
-      val emb = Tables.fanned(s, dir, "embeddings")
+      val emb = Tables.embeddings(s, dir)
         .where(size(col("embedding")) === 64)
       val cal = emb.select(posexplode(col("embedding").cast("array<double>")))
         .select(col("pos").as("dim"),
@@ -2395,7 +2395,7 @@ object TrainingQueries extends QueryPack {
     // is folding onto one direction; the companion number to
     // corpus_diversity's token-level Simpson index.
     "emb_diversity" -> { (s, dir) =>
-      Similarity.avgPairwiseCosine(Tables.fanned(s, dir, "embeddings"),
+      Similarity.avgPairwiseCosine(Tables.embeddings(s, dir),
         "embedding", dim = 64)
     },
 
@@ -2415,7 +2415,7 @@ object TrainingQueries extends QueryPack {
     // chain — corpus Gram → power iteration → per-vector projection —
     // as one hash-checked plan.
     "emb_abtt" -> { (s, dir) =>
-      val emb = Tables.fanned(s, dir, "embeddings")
+      val emb = Tables.embeddings(s, dir)
       Similarity.abttResidualDots(emb, "vec_id", "embedding",
         Similarity.topPcFixedPoint(cachedGram(s, dir), dim = 64), dim = 64)
     },
@@ -2424,7 +2424,7 @@ object TrainingQueries extends QueryPack {
     // Lloyd's round in exact fixed point (integer assignment, integer
     // floor-division centroid update, integer re-assignment).
     "emb_kmeans" -> { (s, dir) =>
-      Similarity.kmeansFixedPoint(Tables.fanned(s, dir, "embeddings"), "vec_id",
+      Similarity.kmeansFixedPoint(Tables.embeddings(s, dir), "vec_id",
         "embedding", k = 8, dim = 64)
     },
 
@@ -2435,7 +2435,7 @@ object TrainingQueries extends QueryPack {
     // usable scale); integer distances, exact half-medians, pure
     // integer flag (no float threshold exists).
     "emb_outliers" -> { (s, dir) =>
-      Similarity.kmeansOutliers(Tables.fanned(s, dir, "embeddings"), "vec_id",
+      Similarity.kmeansOutliers(Tables.embeddings(s, dir), "vec_id",
         "embedding", k = 8, dim = 64, nMads = 3)
     },
 
@@ -2450,7 +2450,7 @@ object TrainingQueries extends QueryPack {
     // ... and trained-cell purity: how label-coherent each kmeans cell
     // is (majority label share) — the quantizer-quality metric.
     "emb_cell_purity" -> { (s, dir) =>
-      val emb = Tables.fanned(s, dir, "embeddings")
+      val emb = Tables.embeddings(s, dir)
       val asg = Similarity.kmeansFixedPoint(emb, "vec_id", "embedding",
         k = 8, dim = 64)
       val cnt = asg.join(emb.select(col("vec_id"), col("label")), "vec_id")
@@ -2466,7 +2466,7 @@ object TrainingQueries extends QueryPack {
     // → corpus cells → nProbe probe → cosine rank, one hash-checked plan
     // (sim_ann_ivf is the same search with training frozen out).
     "sim_ann_ivf_trained" -> { (s, dir) =>
-      val emb = Tables.fanned(s, dir, "embeddings")
+      val emb = Tables.embeddings(s, dir)
       Similarity.ivfTopKTrained(emb, emb.where(col("vec_id") < 10),
         "vec_id", "embedding", kTop = 5, nLists = 8, nProbe = 2, dim = 64)
     },
@@ -2574,7 +2574,7 @@ object TrainingQueries extends QueryPack {
 
     // video-level near-dup (content-ID shape): each video fingerprints
     // as its sampled frames' hashes; candidate pairs come from the
-    // frame-hash INVERTED INDEX (posting lists, map-side pair fan-out,
+    // frame-hash INVERTED INDEX (posting lists, map-side pair expansion,
     // hot-frame cap at 100 — the dedup_jaccard discipline, never a
     // frame self-join), near-dup when ≥2 of the 4 sampled frames match.
     "mm_video_neardup" -> { (s, dir) =>
@@ -2706,10 +2706,6 @@ object TrainingQueries extends QueryPack {
     // standard scale trick). Deterministic argmax tie-break (count desc,
     // pair asc) and row-local greedy merge application let the oracle
     // replay training round for round with chained string replaces.
-    // NOT fanned: train's per-round re-scans each pay the fan-out
-    // exchange, and the word-frequency collapse is its own shuffle
-    // anyway — isolated A/B r16: fanned 1.36 s vs un-fanned 0.92 s
-    // (min-of-5), the one kept-loser site of the r15 batch.
     "text_bpe" -> { (s, dir) =>
       Bpe.train(Tables.documents(s, dir), "text", rounds = 3)
     },
@@ -2719,7 +2715,7 @@ object TrainingQueries extends QueryPack {
     // rules come off the bpeRules sidecar (trained once per session);
     // the encode itself is a zero-shuffle projection + one per-doc sum.
     "text_bpe_encode" -> { (s, dir) =>
-      Bpe.encodeTokenCounts(Tables.fanned(s, dir, "documents"), "doc_id", "text",
+      Bpe.encodeTokenCounts(Tables.documents(s, dir), "doc_id", "text",
         bpeRules(s, dir))
     },
 
@@ -2787,7 +2783,7 @@ object TrainingQueries extends QueryPack {
     // word under the 3 learned rules — vocab_oov's cost-side twin (an
     // outlier source pays proportionally more sequence length).
     "vocab_fertility" -> { (s, dir) =>
-      Bpe.fertilityBySource(Tables.fanned(s, dir, "documents"), "source", "text",
+      Bpe.fertilityBySource(Tables.documents(s, dir), "source", "text",
         bpeRules(s, dir))
     }
   )
@@ -2810,7 +2806,7 @@ object TrainingQueries extends QueryPack {
     * 'A'-padded; text is ASCII by construction so char == byte). */
   private def bmpMedia(s: org.apache.spark.sql.SparkSession, dir: String) = {
     import s.implicits._
-    Tables.fanned(s, dir, "documents").select(col("doc_id"), col("text")).as[(Long, String)]
+    Tables.documents(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
       .map { case (id, text) =>
         val payload = text.take(48).padTo(48, 'A').map(c => (c & 0xff).toByte).toArray
         (id, Multimodal.bmpFromBytes(payload, 4, 4), "image/bmp", "synthetic",
@@ -3150,7 +3146,7 @@ object TrainingQueries extends QueryPack {
       |             unnest(range(0, greatest(len(t)-14,0))) AS i FROM toks)),
       |ok AS (SELECT shingle FROM sh GROUP BY shingle
       |       HAVING count(*) BETWEEN 2 AND 100),
-      |pairs AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
+      |pairs AS MATERIALIZED (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
       |  FROM sh l JOIN sh r ON l.shingle = r.shingle AND l.doc_id < r.doc_id
       |  JOIN ok ON l.shingle = ok.shingle),
       |edges AS (SELECT a AS src, b AS dst FROM pairs
@@ -3321,12 +3317,12 @@ object TrainingQueries extends QueryPack {
     def round(prev: String, e: String, c: String) =
       s"""$e AS (SELECT p.a, p.b FROM pairs p
          |  JOIN $prev x ON p.a = x.id JOIN $prev y ON p.b = y.id),
-         |$c AS (SELECT id FROM (
+         |$c AS MATERIALIZED (SELECT id FROM (
          |    SELECT id, count(*) AS deg FROM (
          |      SELECT a AS id FROM $e UNION ALL SELECT b FROM $e)
          |    GROUP BY id) WHERE deg >= 2)"""
     s"""WITH $spanEdgeCtes,
-       |c0 AS (SELECT DISTINCT id FROM (
+       |c0 AS MATERIALIZED (SELECT DISTINCT id FROM (
        |  SELECT a AS id FROM pairs UNION ALL SELECT b FROM pairs)),
        |${round("c0", "e1", "c1")},
        |${round("c1", "e2", "c2")},
@@ -3840,14 +3836,14 @@ object TrainingQueries extends QueryPack {
         |bgc AS (SELECT shingle, CAST(sum(c) AS BIGINT) AS n_bg FROM perdoc GROUP BY 1),
         |w1s AS (SELECT split_part(shingle, ' ', 1) AS w1,
         |          CAST(sum(n_bg) AS BIGINT) AS n_w1,
-        |          CAST(count(*) AS BIGINT) AS fanout FROM bgc GROUP BY 1),
+        |          CAST(count(*) AS BIGINT) AS n_next FROM bgc GROUP BY 1),
         |contc AS (SELECT split_part(shingle, ' ', -1) AS w2,
         |          CAST(count(*) AS BIGINT) AS n_cont FROM bgc GROUP BY 1),
         |typ AS (SELECT CAST(count(*) AS BIGINT) AS n_types FROM bgc)
         |SELECT doc_id,
         |  round(sum(c * ln(
         |    greatest(CAST(n_bg AS DOUBLE) - 0.75, 0.0) / CAST(n_w1 AS DOUBLE)
-        |    + 0.75 * CAST(fanout AS DOUBLE) / CAST(n_w1 AS DOUBLE)
+        |    + 0.75 * CAST(n_next AS DOUBLE) / CAST(n_w1 AS DOUBLE)
         |      * CAST(n_cont AS DOUBLE) / CAST(n_types AS DOUBLE)))
         |    / sum(c), 4) AS kn_score
         |FROM perdoc
@@ -5282,13 +5278,13 @@ object TrainingQueries extends QueryPack {
          |  FROM common m JOIN sizes sa ON sa.doc_id = m.a
          |  JOIN sizes sb ON sb.doc_id = m.b
          |  WHERE CAST(m.cnt AS DOUBLE)/(sa.n + sb.n - m.cnt) >= 0.1),
-         |fan AS (SELECT t, d FROM pairs,
+         |hit AS (SELECT t, d FROM pairs,
          |    (SELECT unnest([0.1, 0.3, 0.5, 0.7, 0.9]::DOUBLE[]) AS t),
          |    LATERAL unnest([a, b]) AS u(d)
          |  WHERE jaccard >= t)
          |SELECT t, CAST(count(*) // 2 AS BIGINT) AS n_pairs,
          |  CAST(count(DISTINCT d) AS BIGINT) AS n_docs_affected
-         |FROM fan GROUP BY t""".stripMargin,
+         |FROM hit GROUP BY t""".stripMargin,
     "dedup_simhash" ->
       """WITH words AS (
         |  SELECT doc_id, w, count(*) AS cnt,

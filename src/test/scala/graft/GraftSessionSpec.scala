@@ -4,7 +4,10 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import graft.ops.Tables
+import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+import org.apache.spark.sql.functions.{col, explode, split}
+
+import graft.ops.{ScanFanOut, Tables}
 import graft.streaming.{SnapshotCdc, ViewMaintenance}
 
 /** Guards the one-session-factory rule: every session, in the mains and
@@ -92,6 +95,29 @@ class GraftSessionSpec extends SparkSpec {
     assert(writes === allowed)
   }
 
+  /** The argument lists of every `.repartition(...)` call in `text`. */
+  private def repartitionArgs(text: String): Seq[String] =
+    "\\.repartition\\(".r.findAllMatchIn(text).map { m =>
+      var (depth, i) = (1, m.end)
+      while (depth > 0 && i < text.length) {
+        if (text(i) == '(') depth += 1 else if (text(i) == ')') depth -= 1
+        i += 1
+      }
+      text.substring(m.end, i - 1)
+    }.toSeq
+
+  test("queries read plainly: scan fan-out is decided by the ScanFanOut rule") {
+    val stableId = "\"(l_orderkey|o_orderkey|c_custkey|doc_id|vec_id|event_id)\"".r
+    val offenders = sources("src/main/scala/graft/queries").collect {
+      case (f, text) if text.contains("Tables.fanned") ||
+          repartitionArgs(text).exists(stableId.findFirstIn(_).isDefined) => f
+    }
+    assert(offenders.isEmpty)
+    // the probe itself finds a stable-id repartition
+    assert(repartitionArgs("""d.repartition(8, col("doc_id")).select(x)""") ===
+      Seq("""8, col("doc_id")"""))
+  }
+
   test("reads and CDC sinks leave the session's conf as it was") {
     val child = spark.newSession()
     child.conf.set("spark.graft.scan.fanout", "true") // exercise the fan-out path
@@ -103,7 +129,14 @@ class GraftSessionSpec extends SparkSpec {
     }
     unchanged("Tables.table")(Tables.table(child, sf(), "lineitem").count())
     unchanged("Tables.events")(Tables.events(child, sf()).count())
-    unchanged("Tables.fanned")(Tables.fanned(child, sf(), "orders").count())
+    unchanged("Tables.table, fanned by the rule") {
+      val words = Tables.table(child, sf(), "documents")
+        .select(explode(split(col("text"), " ")))
+      assert(child.experimental.extraOptimizations.contains(ScanFanOut))
+      assert(words.queryExecution.optimizedPlan
+        .exists(_.isInstanceOf[RepartitionByExpression]))
+      words.count()
+    }
 
     val tmp = Files.createTempDirectory("confguard")
     try {
